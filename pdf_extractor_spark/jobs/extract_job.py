@@ -8,8 +8,10 @@
         [--strategy dispatch|salt|none] [--partitions N]
 
 Local runs: ``python -m pdf_extractor_spark.jobs.extract_job …`` (builds its
-own local[*] session). Re-running against the same warehouse resumes —
-completed (partition, snapshot, version) triples are skipped.
+own local[*] session). Re-running against the same warehouse resumes per
+partition-date: a date is skipped when lineage holds an ok row for the
+current extractor version naming the date's current pages manifest, so an
+append re-extracts only the dates it changed.
 """
 
 from __future__ import annotations

@@ -1,13 +1,15 @@
 """The end-to-end extraction plan (SURVEY.md §4.3), resumable per partition.
 
-Physical shape per partition-date::
+Physical shape per chunk of pending partition-dates::
 
-    IceTable scan (manifest-pruned to ONE pending date)   -- no file listing
+    IceTable scan (manifest-pruned to the chunk's dates)  -- no file listing
     → Project(url, warc_ts, html)                          -- column pruning
-    → salted repartition (byte-length buckets)             -- skew fix
-    → mapInPandas(extract)                                 -- Arrow batches
-    → overwrite_partitions(extracted, date)                -- idempotent commit
-    → lineage.append(ok | failed row)                      -- driver-side
+    → two-branch dispatch: small rows keep scan splits,    -- skew fix
+      giants repartition one per task (or, strategy="salt",
+      a byte-bucket salted repartition)
+    → mapInArrow(extract)                                  -- Arrow batches
+    → overwrite_partitions(extracted, dates)               -- idempotent commit
+    → lineage.append(ok | failed row per date)             -- driver-side
 
 Why a driver loop over PARTITIONS (not one mega-job): each iteration is a
 full-cluster distributed job over one crawl-day (≈ hundreds of GB at design
@@ -17,9 +19,12 @@ partitions, (c) bounded blast radius — one poisoned day never rolls back a
 month. This is the standard Iceberg incremental-batch topology; the loop is
 O(days), never O(rows).
 
-Resume: completed (date, snapshot, extractor_version) triples come from the
-lineage log; pending dates prune at the MANIFEST level, so Spark never lists
-completed partitions' files. The equivalent relational form (left_anti join
+Resume is keyed per date on its INPUT MANIFEST: a date is done when the
+lineage log holds an ok row for the current extractor version naming the
+date's current pages manifest ref (content-addressed, so an append to one
+date leaves every other date's ref — and its done state — unchanged).
+Pending dates prune at the manifest level, so Spark never lists completed
+partitions' files. The equivalent relational form (left_anti join
 pages↔lineage) is tested in tests/test_resume.py for parity.
 """
 
@@ -129,9 +134,14 @@ def run_extract(
     extracted_tbl = IceTable(f"{warehouse}/extracted")
     lineage = LineageLog(f"{warehouse}/lineage")
 
+    # the resume keys are captured BEFORE any chunk's scan is planned: if
+    # an append lands mid-run, a chunk reads newer files than its recorded
+    # ref names, so that date is re-extracted next run — never wrongly
+    # skipped
     snap_id = pages.snapshot_id()
-    all_dates = pages.partitions()
-    done = lineage.completed_partitions(EXTRACTOR_VERSION, snap_id)
+    manifests = pages.partition_manifests()
+    all_dates = sorted(manifests)
+    done = lineage.completed_partitions(EXTRACTOR_VERSION, snap_id, manifests)
     pending = [d for d in all_dates if d not in done]
     result = ExtractRunResult(
         input_snapshot_id=snap_id, skipped=[d for d in all_dates if d in done]
@@ -218,6 +228,7 @@ def run_extract(
                         "wall_time_s": wall,
                         "attempt": attempts[date],
                         "status": "ok",
+                        "input_manifest": manifests[date],
                     }
                     for date in chunk
                 ]
@@ -237,6 +248,7 @@ def run_extract(
                         "wall_time_s": wall,
                         "attempt": attempts[date],
                         "status": "failed",
+                        "input_manifest": manifests[date],
                     }
                     for date in chunk
                 ]
@@ -249,27 +261,40 @@ def run_extract(
 
 def pending_via_anti_join(spark, pages: IceTable, warehouse: str) -> list[str]:
     """The relational form of the resume set — pages partitions LEFT ANTI
-    lineage(ok, version, snapshot). The driver loop uses the manifest-set
-    form (zero cluster work); this exists for parity testing and as the
-    pattern a pure-SQL deployment would use (broadcast anti-join: lineage is
+    lineage(ok, version, same input manifest; or, for rows without one,
+    same snapshot). The driver loop uses the manifest-set form (zero
+    cluster work); this exists for parity testing and as the pattern a
+    pure-SQL deployment would use (broadcast anti-join: lineage is
     O(partitions) rows, always broadcastable)."""
     from pyspark.sql import functions as F
 
     lineage = LineageLog(f"{warehouse}/lineage")
     snap_id = pages.snapshot_id()
     parts_df = spark.createDataFrame(
-        [(d,) for d in pages.partitions()], "partition_date string"
-    )
+        list(pages.partition_manifests().items()),
+        "partition_date string, input_manifest string",
+    ).alias("p")
     done_df = (
         lineage.read(spark)
         .filter(
             (F.col("status") == "ok")
             & (F.col("extractor_version") == EXTRACTOR_VERSION)
-            & (F.col("input_snapshot_id") == F.lit(snap_id))
         )
-        .select(F.col("partition_date").cast("string").alias("partition_date"))
+        .select(
+            F.col("partition_date").cast("string").alias("partition_date"),
+            "input_manifest",
+            "input_snapshot_id",
+        )
+        .alias("l")
     )
+    key_matches = F.when(
+        F.col("l.input_manifest").isNull(),
+        F.col("l.input_snapshot_id") == F.lit(snap_id),
+    ).otherwise(F.col("l.input_manifest") == F.col("p.input_manifest"))
     pending = parts_df.join(
-        F.broadcast(done_df), on="partition_date", how="left_anti"
+        F.broadcast(done_df),
+        on=(F.col("p.partition_date") == F.col("l.partition_date"))
+        & key_matches,
+        how="left_anti",
     )
-    return sorted(r[0] for r in pending.collect())
+    return sorted(r[0] for r in pending.select("partition_date").collect())

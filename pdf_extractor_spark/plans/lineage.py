@@ -4,17 +4,23 @@ Schema (FIXTURES.md §4)::
 
     partition_date DATE, input_snapshot_id BIGINT, rows_in BIGINT,
     rows_out BIGINT, n_errors BIGINT, extractor_version STRING,
-    wall_time_s DOUBLE, attempt INT, status STRING
+    wall_time_s DOUBLE, attempt INT, status STRING, input_manifest STRING
 
 Storage: append-only parquet files under ``<root>/lineage/`` written
 driver-side with pyarrow — lineage rows are O(partitions), tiny by design,
 so they never need an executor. Readable by Spark/duckdb for audits and by
-``completed_partitions`` for resume.
+``completed_partitions`` for resume. Files written before a column existed
+read it as NULL.
 
-Resume rule: a partition is DONE iff some lineage row has status='ok' AND
-the same extractor_version AND the same input snapshot id. Bumping the
-extractor version or appending new input data to a partition both invalidate
-it — exactly Iceberg's snapshot-based incremental-processing contract.
+Resume rule, per partition: a date is DONE iff some lineage row has
+status='ok' AND the same extractor_version AND an ``input_manifest`` equal
+to the date's current manifest ref in the pages table. Manifests are
+content-addressed and re-referenced by commits that leave a partition
+alone, so appending to one date reopens only that date; a new date is
+pending because no row names its manifest. Rows with a NULL
+``input_manifest`` (files from before the column, or pages partitions
+stored as legacy inline lists) fall back to matching the whole-table
+input snapshot id.
 """
 
 from __future__ import annotations
@@ -37,6 +43,8 @@ LINEAGE_SCHEMA = pa.schema(
         pa.field("wall_time_s", pa.float64()),
         pa.field("attempt", pa.int32()),
         pa.field("status", pa.string()),
+        # the pages partition's manifest ref the row's extraction read
+        pa.field("input_manifest", pa.string()),
     ]
 )
 
@@ -51,7 +59,7 @@ class LineageLog:
     def records(self) -> list[dict]:
         rows: list[dict] = []
         for f in self._files():
-            rows.extend(pq.read_table(f).to_pylist())
+            rows.extend(pq.read_table(f, schema=LINEAGE_SCHEMA).to_pylist())
         return rows
 
     def append(self, rows: list[dict]) -> None:
@@ -71,16 +79,26 @@ class LineageLog:
         tmp.rename(self.root / f"run-{uuid.uuid4().hex}.parquet")
 
     def completed_partitions(
-        self, extractor_version: str, input_snapshot_id: int
+        self,
+        extractor_version: str,
+        input_snapshot_id: int,
+        input_manifests: dict[str, str | None],
     ) -> set[str]:
+        """Dates whose current input (``input_manifests``: date → manifest
+        ref) was already extracted ok by ``extractor_version``."""
         done: set[str] = set()
         for r in self.records():
             if (
-                r["status"] == "ok"
-                and r["extractor_version"] == extractor_version
-                and r["input_snapshot_id"] == input_snapshot_id
+                r["status"] != "ok"
+                or r["extractor_version"] != extractor_version
             ):
-                done.add(r["partition_date"].isoformat())
+                continue
+            date = r["partition_date"].isoformat()
+            if r["input_manifest"] is None:
+                if r["input_snapshot_id"] == input_snapshot_id:
+                    done.add(date)
+            elif r["input_manifest"] == input_manifests.get(date):
+                done.add(date)
         return done
 
     def attempts(self, partition_date: str) -> int:
@@ -94,24 +112,12 @@ class LineageLog:
         """Lineage as a Spark DataFrame (for audits / the anti-join form).
 
         The schema is passed EXPLICITLY: without it Spark samples one file,
-        so a warehouse mixing pre-0.1.1 files (no n_errors column) with new
-        ones would get a nondeterministic schema — n_errors silently
+        so a warehouse mixing files from before a column existed with new
+        ones would get a nondeterministic schema — the column silently
         present or absent depending on which file was sampled."""
-        import pyspark.sql.types as T
+        from pyspark.sql.pandas.types import from_arrow_schema
 
-        schema = T.StructType(
-            [
-                T.StructField("partition_date", T.DateType()),
-                T.StructField("input_snapshot_id", T.LongType()),
-                T.StructField("rows_in", T.LongType()),
-                T.StructField("rows_out", T.LongType()),
-                T.StructField("n_errors", T.LongType()),
-                T.StructField("extractor_version", T.StringType()),
-                T.StructField("wall_time_s", T.DoubleType()),
-                T.StructField("attempt", T.IntegerType()),
-                T.StructField("status", T.StringType()),
-            ]
-        )
+        schema = from_arrow_schema(LINEAGE_SCHEMA)
         files = [str(f) for f in self._files()]
         if not files:
             return spark.createDataFrame([], schema)

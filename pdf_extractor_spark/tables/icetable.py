@@ -242,6 +242,20 @@ class IceTable:
         snap = self.current_snapshot()
         return sorted(snap["partitions"]) if snap else []
 
+    def partition_manifests(self) -> dict[str, str | None]:
+        """{partition: manifest ref} for the current snapshot. Manifests
+        are content-addressed and a commit re-references an untouched
+        partition's manifest, so an unchanged ref means unchanged input
+        — the per-partition resume key. Legacy inline-list entries have
+        no manifest and map to None."""
+        snap = self.current_snapshot()
+        if snap is None:
+            return {}
+        return {
+            p: ref if isinstance(ref, str) else None
+            for p, ref in sorted(snap["partitions"].items())
+        }
+
     def _manifest_entry(self, ref) -> tuple[list[str], dict]:
         """Resolve a partition entry to (relative data-file list,
         {file: {col: [tag, lo, hi]}} stats). The entry is a manifest-file
@@ -788,7 +802,13 @@ class IceTable:
         tag-protection set was read but BEFORE the unlink — the lease
         would point at a deleted snapshot (same in-process concurrency
         the lock closes for commits; cross-process writers remain out
-        of scope)."""
+        of scope). ``keep_last`` must be >= 1: the current snapshot can
+        never be expired."""
+        if keep_last < 1:
+            raise ValueError(
+                f"keep_last={keep_last}: must be >= 1 (the current "
+                "snapshot is always kept)"
+            )
         with self.commit_lock:
             return self._expire_snapshots_locked(keep_last)
 

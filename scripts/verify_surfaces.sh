@@ -71,6 +71,36 @@ assert 0 < len(pruned) < len(live), (len(pruned), len(live))
 assert t.tags().get("verified") == t.snapshot_id()
 print("surface3 sort-cluster skipping OK:", len(live), "->", len(pruned))
 EOF
+# per-date resume: land one new day in the pages table, then the re-run
+# extracts exactly that day and skips the 8 older ones
+NEW_DAY=$(python - <<'EOF' 2>/dev/null
+import datetime as dt
+from pyspark.sql import SparkSession, functions as F
+from pdf_extractor_spark.tables.icetable import IceTable
+spark = (SparkSession.builder.master("local[2]")
+         .config("spark.ui.enabled", "false")
+         .config("spark.sql.session.timeZone", "UTC").getOrCreate())
+pages = IceTable("/tmp/vwh/pages")
+new_day = dt.date.fromisoformat(max(pages.partitions())) + dt.timedelta(days=1)
+src = spark.read.parquet("/tmp/vg/pages_micro.parquet")
+last = src.agg(F.max(F.to_date("warc_ts"))).first()[0]
+shift = (new_day - last).days
+day = (src.filter(F.to_date("warc_ts") == F.lit(last))
+       .withColumn("url", F.concat("url", F.lit("?day=new")))
+       .withColumn("warc_ts", F.col("warc_ts") + F.expr(f"INTERVAL {shift} DAYS"))
+       .withColumn("partition_date", F.to_date("warc_ts")))
+pages.append(day)
+spark.stop()
+print(new_day.isoformat())
+EOF
+)
+python -m pdf_extractor_spark.jobs.extract_job \
+  --pages /tmp/vg/pages_micro.parquet --warehouse /tmp/vwh 2>/dev/null | tail -1 \
+  | NEW_DAY="$NEW_DAY" python -c "import os, sys, json; \
+d = json.loads(sys.stdin.read()); \
+assert d['processed'] == [os.environ['NEW_DAY']] and len(d['skipped']) == 8 \
+  and not d['failed'], d; \
+print('surface3 per-date resume OK: processed', d['processed'], 'skipped', len(d['skipped']))"
 
 echo "=== surface 4: driver contract (full sweep, sf0.01) ==="
 python scripts/full_sweep.py /root/testdata/sf0.01 2>/dev/null | tail -2

@@ -122,6 +122,45 @@ def test_expire_snapshots_gc(spark, tbl):
         tbl.read_snapshot(spark, 0)
 
 
+def test_expire_snapshots_rejects_keep_last_below_one(spark, tbl):
+    """keep_last=0 used to slice snaps[-0:] — the whole list — and
+    silently expire nothing; the current snapshot can never go, so
+    the call is a misuse and must say so."""
+    for i in range(3):
+        tbl.append(_df(spark, [(i, "a", "2025-06-14")]))
+    for bad in (0, -1):
+        with pytest.raises(ValueError, match="keep_last"):
+            tbl.expire_snapshots(keep_last=bad)
+    assert [h["snapshot_id"] for h in tbl.history()] == [0, 1, 2]
+
+
+def test_partition_manifests_key_unchanged_input(spark, tbl):
+    """The per-partition resume key: an append keeps every untouched
+    partition's ref and changes the appended one's; a legacy inline-list
+    entry has no ref."""
+    tbl.append(_df(spark, [(1, "a", "2025-06-14"), (2, "b", "2025-06-15")]))
+    before = tbl.partition_manifests()
+    assert sorted(before) == tbl.partitions()
+    assert all(r.startswith("metadata/manifests/") for r in before.values())
+    tbl.append(_df(spark, [(3, "c", "2025-06-15"), (4, "d", "2025-06-16")]))
+    after = tbl.partition_manifests()
+    assert after["2025-06-14"] == before["2025-06-14"]
+    assert after["2025-06-15"] != before["2025-06-15"]
+    assert "2025-06-16" in after
+
+    import json
+
+    snap_path = tbl.meta_dir / (tbl.meta_dir / "CURRENT").read_text().strip()
+    snap = json.loads(snap_path.read_text())
+    snap["partitions"]["2025-06-14"] = tbl.partition_files(
+        snap["partitions"]["2025-06-14"]
+    )
+    snap_path.write_text(json.dumps(snap))
+    legacy = tbl.partition_manifests()
+    assert legacy["2025-06-14"] is None
+    assert legacy["2025-06-15"] == after["2025-06-15"]
+
+
 def test_commit_metadata_is_o_changed_partitions(spark, tbl):
     """Hierarchical manifests: an append touching one partition must reuse
     every other partition's manifest file verbatim (content-addressed),

@@ -33,6 +33,31 @@ def _read_extracted(spark, wh):
     return IceTable(f"{wh}/extracted").read(spark)
 
 
+def _extracted_rows(spark, wh):
+    return sorted(
+        (r.url, r.extracted_text, r.doc_type)
+        for r in _read_extracted(spark, wh).collect()
+    )
+
+
+def _append_day(spark, corpus, pages, from_date, shift_days=0, n=6):
+    """Append ``n`` corpus rows of ``from_date`` under new urls, moved
+    ``shift_days`` later (0 = into the same date)."""
+    from pyspark.sql import functions as F
+
+    rows = (
+        spark.read.parquet(str(corpus))
+        .filter(F.to_date("warc_ts") == F.lit(from_date))
+        .limit(n)
+        .withColumn("url", F.concat(F.col("url"), F.lit("?v=2")))
+        .withColumn(
+            "warc_ts", F.col("warc_ts") + F.expr(f"INTERVAL {shift_days} DAYS")
+        )
+        .withColumn("partition_date", F.to_date("warc_ts"))
+    )
+    pages.append(rows)
+
+
 def test_full_run_then_noop(spark, pages_tbl, tmp_path):
     wh = str(tmp_path / "wh")
     r1 = run_extract(spark, pages_tbl, wh, salt=False)
@@ -95,19 +120,36 @@ def test_lineage_rows_complete(spark, pages_tbl, tmp_path):
     run_extract(spark, pages_tbl, wh, salt=False)
     recs = LineageLog(f"{wh}/lineage").records()
     assert len(recs) == N_DAYS
+    manifests = pages_tbl.partition_manifests()
     for r in recs:
         assert r["status"] == "ok"
         assert r["extractor_version"] == EXTRACTOR_VERSION
         assert r["input_snapshot_id"] == pages_tbl.snapshot_id()
+        date = r["partition_date"].isoformat()
+        assert r["input_manifest"] == manifests[date]
         assert r["rows_out"] > 0
         assert r["wall_time_s"] > 0
 
 
-def test_anti_join_form_matches_manifest_form(spark, pages_tbl, tmp_path):
+def test_anti_join_form_matches_manifest_form(
+    spark, pages_tbl, tmp_path, corpus
+):
     wh = str(tmp_path / "wh")
     run_extract(spark, pages_tbl, wh, salt=False, max_dates=1)
     pending = pending_via_anti_join(spark, pages_tbl, wh)
     assert pending == pages_tbl.partitions()[1:]
+
+    # after an append to one completed date, both forms reopen exactly it
+    dates = pages_tbl.partitions()
+    run_extract(spark, pages_tbl, wh, salt=False)
+    _append_day(spark, corpus, pages_tbl, dates[2])
+    manifests = pages_tbl.partition_manifests()
+    done = LineageLog(f"{wh}/lineage").completed_partitions(
+        EXTRACTOR_VERSION, pages_tbl.snapshot_id(), manifests
+    )
+    manifest_form = sorted(d for d in manifests if d not in done)
+    assert manifest_form == [dates[2]]
+    assert pending_via_anti_join(spark, pages_tbl, wh) == manifest_form
 
 
 def test_new_snapshot_invalidates(spark, pages_tbl, tmp_path, corpus):
@@ -128,6 +170,92 @@ def test_new_snapshot_invalidates(spark, pages_tbl, tmp_path, corpus):
     r = run_extract(spark, pages_tbl, wh, salt=False)
     assert r.skipped == []  # all partitions reprocessed
     assert len(r.processed) > 0
+
+
+def test_append_to_one_date_reextracts_only_it(
+    spark, pages_tbl, tmp_path, corpus
+):
+    """Resume is keyed on each date's input manifest: rows appended to
+    one existing date reopen that date alone, and the result equals a
+    fresh extraction of the grown table."""
+    wh = str(tmp_path / "wh")
+    run_extract(spark, pages_tbl, wh, salt=False)
+    dates = pages_tbl.partitions()
+    _append_day(spark, corpus, pages_tbl, dates[1])
+    r = run_extract(spark, pages_tbl, wh, salt=False)
+    assert r.processed == [dates[1]] and not r.failed
+    assert r.skipped == [d for d in dates if d != dates[1]]
+    assert r.input_snapshot_id == pages_tbl.snapshot_id()
+
+    wh_ref = str(tmp_path / "wh_ref")
+    run_extract(spark, pages_tbl, wh_ref, salt=False)
+    assert _extracted_rows(spark, wh) == _extracted_rows(spark, wh_ref)
+
+
+def test_append_new_date_extracts_only_it(spark, pages_tbl, tmp_path, corpus):
+    wh = str(tmp_path / "wh")
+    run_extract(spark, pages_tbl, wh, salt=False)
+    dates = pages_tbl.partitions()
+    _append_day(spark, corpus, pages_tbl, dates[-1], shift_days=30)
+    new_date = pages_tbl.partitions()[-1]
+    assert new_date not in dates
+    r = run_extract(spark, pages_tbl, wh, salt=False)
+    assert r.processed == [new_date] and r.skipped == dates
+
+    wh_ref = str(tmp_path / "wh_ref")
+    run_extract(spark, pages_tbl, wh_ref, salt=False)
+    assert _extracted_rows(spark, wh) == _extracted_rows(spark, wh_ref)
+
+
+def test_second_pages_table_same_warehouse_is_extracted(
+    spark, pages_tbl, tmp_path
+):
+    """A different pages table at the same snapshot id with the same
+    dates has different manifests, so its dates are pending — under a
+    whole-table snapshot key they were silently skipped."""
+    wh = str(tmp_path / "wh")
+    run_extract(spark, pages_tbl, wh, salt=False)
+    other_corpus = tmp_path / "other.parquet"
+    write_pages_parquet(other_corpus, seed=8, n_rows=N_ROWS, n_days=N_DAYS)
+    other = ingest_corpus_to_icetable(spark, other_corpus, tmp_path / "pages2")
+    assert other.snapshot_id() == pages_tbl.snapshot_id() == 0
+    assert set(other.partitions()) & set(pages_tbl.partitions())
+
+    r = run_extract(spark, other, wh, salt=False)
+    assert r.processed == other.partitions() and r.skipped == []
+    wh_ref = str(tmp_path / "wh_ref")
+    run_extract(spark, other, wh_ref, salt=False)
+    urls = {u for u, _, _ in _extracted_rows(spark, wh_ref)}
+    assert urls <= {u for u, _, _ in _extracted_rows(spark, wh)}
+
+
+def test_lineage_without_input_manifest_still_resumes(
+    spark, pages_tbl, tmp_path
+):
+    """Lineage files written before the input_manifest column read it as
+    NULL (pyarrow and Spark) and fall back to the snapshot-id rule, so a
+    re-run on the same snapshot stays a no-op."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    from pdf_extractor_spark.plans.lineage import LINEAGE_SCHEMA
+
+    wh = str(tmp_path / "wh")
+    run_extract(spark, pages_tbl, wh, salt=False)
+    lineage = LineageLog(f"{wh}/lineage")
+    for f in lineage._files():
+        pq.write_table(pq.read_table(f).drop_columns(["input_manifest"]), f)
+        assert "input_manifest" not in pq.read_schema(f).names
+    recs = lineage.records()
+    assert len(recs) == N_DAYS
+    assert all(r["input_manifest"] is None for r in recs)
+    df = lineage.read(spark)
+    assert df.schema == from_arrow_schema(LINEAGE_SCHEMA)
+    assert df.filter("input_manifest IS NOT NULL").count() == 0
+    assert pending_via_anti_join(spark, pages_tbl, wh) == []
+
+    r = run_extract(spark, pages_tbl, wh, salt=False)
+    assert r.processed == [] and r.skipped == pages_tbl.partitions()
 
 
 def test_preflight_rejects_bad_inputs(spark, tmp_path):
@@ -156,7 +284,7 @@ def test_maintenance_between_kill_and_resume(spark, pages_tbl, tmp_path):
     resume path. Sequence: partial extract ("crash" after 2 of 4 dates)
     → compact() the extracted table → expire_snapshots() → resume.
     Resume must still (a) skip exactly the completed dates (lineage is
-    keyed on the PAGES snapshot, which maintenance of the OUTPUT table
+    keyed on the PAGES manifests, which maintenance of the OUTPUT table
     never touches), (b) produce the same final table as an uninterrupted
     run, and (c) keep time travel valid for every retained snapshot."""
     wh = str(tmp_path / "wh")
