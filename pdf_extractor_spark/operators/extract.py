@@ -1,13 +1,18 @@
 """The vectorized extraction stage — the graft of the reference's entire
-per-request pipeline (/root/reference/main.py:24-42 →
-/root/reference/pdf_processor.py:151-186) into ONE ``mapInPandas`` stage.
+per-request pipeline (the reference's main.py:24-42 →
+pdf_processor.py:151-186) into ONE ``mapInArrow`` stage.
 
 Design (SURVEY.md §4.3):
-- Payload bytes flow Parquet → Arrow RecordBatch → pandas — never to a temp
-  file (reference staged every upload to disk, main.py:28-31).
-- ``mapInPandas`` with the iterator form: per-task init happens once per
+- Payload bytes flow Parquet → Arrow RecordBatch → the extractor, and the
+  output columns are built as Arrow arrays — never a temp file (reference
+  staged every upload to disk, main.py:28-31) and no pandas round trip.
+- ``mapInArrow`` with the iterator form: per-task init happens once per
   Python worker, not once per row (reference re-initialized every engine per
   request, main.py:34 — SURVEY.md O2 reversal).
+- Skew: ``extract_stage_dispatch`` sends payloads of GIANT_THRESHOLD_BYTES
+  and up to a one-per-task branch; a caller that can prove no payload
+  reaches the threshold (``run_extract``, from parquet footers) runs the
+  plain ``extract_stage`` instead.
 - Dispatch (O3) happens per element INSIDE the Arrow batch; no per-row
   Python outside the UDF, no driver-side loops.
 - Incoming batches are re-chunked by cumulative payload BYTES, not row

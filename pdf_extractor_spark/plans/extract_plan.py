@@ -2,14 +2,23 @@
 
 Physical shape per chunk of pending partition-dates::
 
-    IceTable scan (manifest-pruned to the chunk's dates)  -- no file listing
+    footers of the chunk's pages files                     -- driver, no job
+      → rows_in per date, bound on any one html value
+    IceTable scan (manifest-pruned to the chunk's dates)  -- no file listing,
+                                                              schema bound
     → Project(url, warc_ts, html)                          -- column pruning
-    → two-branch dispatch: small rows keep scan splits,    -- skew fix
-      giants repartition one per task (or, strategy="salt",
-      a byte-bucket salted repartition)
+    → bound < GIANT_THRESHOLD_BYTES: one branch, the scan  -- giant-free:
+      splits as they are                                      no shuffle
+      otherwise two-branch dispatch: small rows keep scan  -- skew fix
+      splits, giants repartition one per task (or,
+      strategy="salt", a byte-bucket salted repartition)
     → mapInArrow(extract)                                  -- Arrow batches
+    → observe(rows_out, n_errors per date)                 -- rides the commit
     → overwrite_partitions(extracted, dates)               -- idempotent commit
+    → check rows_out + url_rejected == rows_in per date    -- else chunk fails
     → lineage.append(ok | failed row per date)             -- driver-side
+
+A giant-free chunk is therefore ONE Spark job: the commit's write.
 
 Why a driver loop over PARTITIONS (not one mega-job): each iteration is a
 full-cluster distributed job over one crawl-day (≈ hundreds of GB at design
@@ -33,9 +42,11 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from pdf_extractor_spark.operators.extract import (
+    GIANT_THRESHOLD_BYTES,
     extract_stage,
     extract_stage_dispatch,
     with_partition_date,
@@ -48,6 +59,15 @@ from pdf_extractor_spark.version import EXTRACTOR_VERSION
 
 class PreflightError(RuntimeError):
     pass
+
+
+class LineageMismatchError(RuntimeError):
+    """A chunk's observed output rows do not account for its input rows."""
+
+
+# a failed lineage row keeps this much of its exception's message (a
+# Spark task failure's message carries the whole JVM stack trace)
+ERROR_MSG_MAX = 2000
 
 
 REQUIRED_PAGES_COLUMNS = {"url", "warc_ts", "html"}
@@ -117,8 +137,9 @@ def run_extract(
     ``dates_per_job`` batches K pending dates into ONE Spark job (round-4):
     the scan prunes to the K partitions, the extract stage runs once over
     their union, the table commit replaces all K partitions atomically,
-    and per-date lineage rows are derived from a single
-    groupBy(partition_date) over the committed output. At 10^3 pending
+    and per-date lineage rows come from the footers (rows_in) and from
+    one count_if pair per date observed on that same job (rows_out,
+    n_errors) — no second pass over the output. At 10^3 pending
     daily partitions the serial per-date loop pays 10^3 job/commit
     latencies with the cluster idle in between; chunking amortizes that
     to 10^3/K while keeping resume granularity (a killed chunk re-runs
@@ -130,7 +151,11 @@ def run_extract(
     stage — the RefinedWeb/C4 reject-by-url-first shape; rejected
     pages never reach the Arrow parser. Deterministic, so resume
     semantics are unchanged; the dropped count lands in
-    ``ExtractRunResult.url_rejected``."""
+    ``ExtractRunResult.url_rejected``.
+
+    A chunk whose observed ``rows_out`` plus URL-gate rejects differ
+    from the footers' ``rows_in`` for any date fails (``status='failed'``
+    with the mismatch in ``error_msg``), so its dates are pending again."""
     extracted_tbl = IceTable(f"{warehouse}/extracted")
     lineage = LineageLog(f"{warehouse}/lineage")
 
@@ -141,7 +166,9 @@ def run_extract(
     snap_id = pages.snapshot_id()
     manifests = pages.partition_manifests()
     all_dates = sorted(manifests)
-    done = lineage.completed_partitions(EXTRACTOR_VERSION, snap_id, manifests)
+    done, prior_attempts = lineage.resume_state(
+        EXTRACTOR_VERSION, snap_id, manifests
+    )
     pending = [d for d in all_dates if d not in done]
     result = ExtractRunResult(
         input_snapshot_id=snap_id, skipped=[d for d in all_dates if d in done]
@@ -154,74 +181,71 @@ def run_extract(
     for i in range(0, len(pending), k):
         chunk = pending[i : i + k]
         t0 = time.monotonic()
-        attempts = {d: lineage.attempts(d) + 1 for d in chunk}
+        attempts = {d: prior_attempts[d] + 1 for d in chunk}
         try:
+            rows_in, payload_bound = pages.footer_sizes(chunk, "html")
             src = pages.read(spark, partitions=chunk)
-            n_url_rejected = 0
+            rejected = dict.fromkeys(chunk, 0)
             if url_filter:
                 # Stage-zero URL gate (web_url_filter's rules as one
                 # predicate): reject crawler-trap / blocklisted /
                 # generated-host pages BEFORE the Arrow extract stage
-                # parses a byte of their HTML. The rejected count is
-                # one extra job over the pruned url column only — the
-                # html bytes that dominate this table's IO are never
-                # read for it (column pruning), so at 100 TB the count
-                # costs ~a url-column scan, never a corpus scan.
+                # parses a byte of their HTML. The per-date rejected
+                # counts are one extra job over the pruned url column
+                # only — the html bytes that dominate this table's IO are
+                # never read for it (column pruning), so at 100 TB the
+                # count costs ~a url-column scan, never a corpus scan.
                 from pdf_extractor_spark.queries.webtext import (
                     url_reject_expr,
                 )
 
-                n_url_rejected = (
-                    src.select("url").filter(url_reject_expr("url")).count()
+                counts = (
+                    src.select("partition_date", "url")
+                    .agg(*_count_per_date(chunk, url_reject_expr("url")))
+                    .first()
                 )
+                rejected = {d: counts[f"hits_{j}"] for j, d in enumerate(chunk)}
                 src = src.filter(~url_reject_expr("url"))
             if strategy == "dispatch":
-                extracted = extract_stage_dispatch(src, with_blocks=with_blocks)
+                extracted = _dispatch_plan(src, payload_bound, with_blocks)
             else:
                 src = salted_repartition(src, num_partitions, enabled=salt)
                 extracted = extract_stage(src, with_blocks=with_blocks)
-            out = with_partition_date(extracted)
+            # per-date rows and errors ride the commit job itself
+            observed = Observation()
+            error = F.col("error").isNotNull() & (F.col("error") != "")
+            out = with_partition_date(extracted).observe(
+                observed, *_count_per_date(chunk, error)
+            )
             # ONE atomic commit replaces every partition in the chunk —
             # readers see all K new dates or none
             extracted_tbl.overwrite_partitions(out)
             if fail_dates and set(chunk) & fail_dates:
                 raise RuntimeError(f"injected failure in chunk {chunk}")
-            # per-date counts from the committed output: one job, one
-            # groupBy over just the chunk's partitions
-            from pyspark.sql import functions as F
-
-            out_df = extracted_tbl.read(spark, partitions=chunk)
-            stats = {
-                r["partition_date"]: r
-                for r in out_df.groupBy(
-                    F.col("partition_date").cast("string").alias(
-                        "partition_date"
+            counts = observed.get
+            rows_out = {d: counts[f"rows_{j}"] for j, d in enumerate(chunk)}
+            n_errors = {d: counts[f"hits_{j}"] for j, d in enumerate(chunk)}
+            for date in chunk:
+                # extraction is 1:1 row-preserving by design: a dropped
+                # or misplaced row fails the chunk instead of passing
+                if (
+                    rows_in[date] is not None
+                    and rows_out[date] + rejected[date] != rows_in[date]
+                ):
+                    raise LineageMismatchError(
+                        f"{date}: rows_in={rows_in[date]} (pages footers) "
+                        f"!= rows_out={rows_out[date]} + "
+                        f"url_rejected={rejected[date]}"
                     )
-                )
-                .agg(
-                    F.count("*").alias("n"),
-                    F.sum(
-                        F.when(
-                            F.col("error").isNotNull()
-                            & (F.col("error") != ""),
-                            1,
-                        ).otherwise(0)
-                    ).alias("ne"),
-                )
-                .collect()
-            }
             wall = time.monotonic() - t0
             lineage.append(
                 [
                     {
                         "partition_date": date,
                         "input_snapshot_id": snap_id,
-                        # extraction is 1:1 row-preserving by design
-                        "rows_in": stats[date]["n"] if date in stats else 0,
-                        "rows_out": stats[date]["n"] if date in stats else 0,
-                        "n_errors": int(stats[date]["ne"] or 0)
-                        if date in stats
-                        else 0,
+                        "rows_in": rows_in[date],
+                        "rows_out": rows_out[date],
+                        "n_errors": n_errors[date],
                         "extractor_version": EXTRACTOR_VERSION,
                         # chunk wall clock: the dates ran as one job, so
                         # each date's row carries the shared job time
@@ -234,9 +258,10 @@ def run_extract(
                 ]
             )
             result.processed.extend(chunk)
-            result.url_rejected += n_url_rejected
-        except Exception:
+            result.url_rejected += sum(rejected.values())
+        except Exception as e:
             wall = time.monotonic() - t0
+            reason = f"{type(e).__name__}: {e}"[:ERROR_MSG_MAX]
             lineage.append(
                 [
                     {
@@ -249,6 +274,7 @@ def run_extract(
                         "attempt": attempts[date],
                         "status": "failed",
                         "input_manifest": manifests[date],
+                        "error_msg": reason,
                     }
                     for date in chunk
                 ]
@@ -257,6 +283,33 @@ def run_extract(
             if fail_dates and set(chunk) & fail_dates:
                 raise
     return result
+
+
+def _count_per_date(dates: list[str], hit) -> list:
+    """Per date ``d_j`` of a chunk, ``rows_j`` (rows whose partition_date
+    is d_j) and ``hits_j`` (those rows where ``hit`` holds): one
+    ``count_if`` pair per date, so every count comes from one pass."""
+    date = F.col("partition_date").cast("string")
+    aggs = []
+    for j, d in enumerate(dates):
+        on = date == F.lit(d)
+        aggs += [
+            F.count_if(on).alias(f"rows_{j}"),
+            F.count_if(on & hit).alias(f"hits_{j}"),
+        ]
+    return aggs
+
+
+def _dispatch_plan(src: DataFrame, payload_bound: int | None, with_blocks: bool):
+    """The dispatch strategy's plan for one chunk. When the footer bound
+    proves no payload reaches GIANT_THRESHOLD_BYTES the giant branch could
+    never receive a row, so the chunk runs as the plain single-branch
+    stage — no shuffle, no idle giant tasks. An unknown bound (a footer
+    unreadable or without ``html``) keeps the two-branch plan; both
+    plans emit the same rows, so a wrong choice costs time, never output."""
+    if payload_bound is not None and payload_bound < GIANT_THRESHOLD_BYTES:
+        return extract_stage(src, with_blocks=with_blocks)
+    return extract_stage_dispatch(src, with_blocks=with_blocks)
 
 
 def pending_via_anti_join(spark, pages: IceTable, warehouse: str) -> list[str]:

@@ -4,7 +4,14 @@ Schema (FIXTURES.md §4)::
 
     partition_date DATE, input_snapshot_id BIGINT, rows_in BIGINT,
     rows_out BIGINT, n_errors BIGINT, extractor_version STRING,
-    wall_time_s DOUBLE, attempt INT, status STRING, input_manifest STRING
+    wall_time_s DOUBLE, attempt INT, status STRING, input_manifest STRING,
+    error_msg STRING
+
+In ``run_extract``'s rows, ``rows_in`` is the number of pages rows the
+date's input files hold, counted from their parquet footers, and
+``rows_out``/``n_errors`` are observed on the commit job itself. A
+``failed`` row's ``error_msg`` names the exception class and message
+that failed its chunk.
 
 Storage: append-only parquet files under ``<root>/lineage/`` written
 driver-side with pyarrow — lineage rows are O(partitions), tiny by design,
@@ -28,6 +35,7 @@ from __future__ import annotations
 import datetime as dt
 import pathlib
 import uuid
+from collections import Counter
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -45,6 +53,8 @@ LINEAGE_SCHEMA = pa.schema(
         pa.field("status", pa.string()),
         # the pages partition's manifest ref the row's extraction read
         pa.field("input_manifest", pa.string()),
+        # failed rows: "<exception class>: <message>" of the chunk's failure
+        pa.field("error_msg", pa.string()),
     ]
 )
 
@@ -86,20 +96,34 @@ class LineageLog:
     ) -> set[str]:
         """Dates whose current input (``input_manifests``: date → manifest
         ref) was already extracted ok by ``extractor_version``."""
+        return self.resume_state(
+            extractor_version, input_snapshot_id, input_manifests
+        )[0]
+
+    def resume_state(
+        self,
+        extractor_version: str,
+        input_snapshot_id: int,
+        input_manifests: dict[str, str | None],
+    ) -> tuple[set[str], Counter]:
+        """One pass over the log: ``completed_partitions``' dates, and
+        every date's attempts so far (ok and failed rows alike)."""
         done: set[str] = set()
+        attempts: Counter = Counter()
         for r in self.records():
+            date = r["partition_date"].isoformat()
+            attempts[date] += 1
             if (
                 r["status"] != "ok"
                 or r["extractor_version"] != extractor_version
             ):
                 continue
-            date = r["partition_date"].isoformat()
             if r["input_manifest"] is None:
                 if r["input_snapshot_id"] == input_snapshot_id:
                     done.add(date)
             elif r["input_manifest"] == input_manifests.get(date):
                 done.add(date)
-        return done
+        return done, attempts
 
     def attempts(self, partition_date: str) -> int:
         return sum(

@@ -141,6 +141,36 @@ def _file_column_stats(path: str, cols: tuple[str, ...]) -> dict:
     return out
 
 
+# Per-file (num_rows, {column: largest uncompressed column-chunk bytes
+# over its row groups}), from the footer only; cached per immutable file
+# like the stats above.
+_FILE_FOOTER_CACHE: dict[str, tuple[int, dict[str, int]]] = {}
+
+
+def _file_footer(path: str) -> tuple[int, dict[str, int]] | None:
+    """Row count and column-chunk sizes of one data file, or None when
+    its footer cannot be read (not cached: the cause may be transient)."""
+    cached = _FILE_FOOTER_CACHE.get(path)
+    if cached is not None:
+        return cached
+    import pyarrow.parquet as pq
+
+    try:
+        md = pq.ParquetFile(path).metadata
+    except (OSError, ValueError):  # missing file, or not parquet
+        return None
+    sizes: dict[str, int] = {}
+    for rg in range(md.num_row_groups):
+        group = md.row_group(rg)
+        for i in range(group.num_columns):
+            chunk = group.column(i)
+            name = chunk.path_in_schema
+            sizes[name] = max(sizes.get(name, 0), chunk.total_uncompressed_size)
+    out = (md.num_rows, sizes)
+    _FILE_FOOTER_CACHE[path] = out
+    return out
+
+
 def _normalize_pred_value(tag: str, value):
     """Predicate constant → the stats encoding's comparable form, or
     None when incomparable (→ no skipping)."""
@@ -311,6 +341,39 @@ class IceTable:
 
     def partition_files(self, part_ref) -> list[str]:
         return self._manifest_files(part_ref)
+
+    def footer_sizes(
+        self, partitions: list[str], col: str
+    ) -> tuple[dict[str, int | None], int | None]:
+        """From the current snapshot's data-file footers alone (no Spark
+        job): each partition's row count, and an upper bound on the byte
+        length of any single ``col`` value — the largest uncompressed
+        ``col`` column chunk of any row group. No value can be longer:
+        plain and dictionary encoding store it whole in one data or
+        dictionary page of its chunk, and delta byte-array rebuilds it
+        from suffixes that are all stored in the chunk. A partition whose
+        footers cannot all be read counts None; the bound is None when
+        any footer is unreadable or a non-empty file lacks ``col``."""
+        snap = self.current_snapshot()
+        parts = snap["partitions"] if snap else {}
+        rows: dict[str, int | None] = {}
+        bound: int | None = 0
+        for part in partitions:
+            files = self._manifest_files(parts[part]) if part in parts else []
+            n: int | None = 0
+            for rel in files:
+                footer = _file_footer(str(self.root / rel))
+                if footer is None:
+                    n = bound = None
+                    continue
+                if n is not None:
+                    n += footer[0]
+                if footer[0] == 0 or bound is None:
+                    continue
+                size = footer[1].get(col)
+                bound = None if size is None else max(bound, size)
+            rows[part] = n
+        return rows, bound
 
     def files(
         self,
@@ -936,13 +999,13 @@ class IceTable:
         evolved: bool,
         schema_json: str | None = None,
     ) -> DataFrame:
-        """All data-file reads funnel here. On schema-evolved tables the
+        """All data-file reads funnel here. On a table that never evolved
+        the snapshot's tracked schema binds the scan, so no Spark job
+        infers it from footers; the partition column is left out of it
+        and keeps Spark's path inference (a ``partition_date`` written as
+        a string still reads back as DATE). On schema-evolved tables the
         scan merges footers (mergeSchema) so pre-evolution files surface
-        added columns as NULL — Iceberg's add-column read semantics. The
-        footer-merge cost is confined to tables that actually evolved; a
-        production catalog binding would impose the tracked schema
-        instead of merging (documented trade — this shim keeps partition
-        -column dtype inference identical on the unevolved fast path).
+        added columns as NULL — Iceberg's add-column read semantics.
 
         mergeSchema only unions the footers of files actually SCANNED,
         so a partition-pruned or file-skipped read whose surviving files
@@ -951,15 +1014,26 @@ class IceTable:
         — any tracked column absent from the scan is appended as a typed
         NULL, so the read's column set never depends on which files
         survived pruning."""
+        from pyspark.sql import types as T
+
         r = spark.read.option("basePath", str(self.data_dir))
+        tracked = (
+            T.StructType.fromJson(json.loads(schema_json))
+            if schema_json
+            else None
+        )
         if evolved:
             r = r.option("mergeSchema", "true")
+        elif tracked is not None:
+            r = r.schema(
+                T.StructType(
+                    [f for f in tracked.fields if f.name != self.partition_col]
+                )
+            )
         df = r.parquet(*files)
-        if evolved and schema_json:
+        if evolved and tracked is not None:
             from pyspark.sql import functions as F
-            from pyspark.sql import types as T
 
-            tracked = T.StructType.fromJson(json.loads(schema_json))
             have = set(df.columns)
             for field in tracked.fields:
                 if field.name not in have:

@@ -101,6 +101,26 @@ d = json.loads(sys.stdin.read()); \
 assert d['processed'] == [os.environ['NEW_DAY']] and len(d['skipped']) == 8 \
   and not d['failed'], d; \
 print('surface3 per-date resume OK: processed', d['processed'], 'skipped', len(d['skipped']))"
+# lineage counts are measured: rows_in from the pages footers, rows_out
+# observed on the commit; both must equal the date's pages rows
+python - <<'EOF'
+import duckdb
+from pdf_extractor_spark.plans.lineage import LineageLog
+from pdf_extractor_spark.tables.icetable import IceTable
+pages = IceTable("/tmp/vwh/pages")
+recs = LineageLog("/tmp/vwh/lineage").records()
+ok = [r for r in recs if r["status"] == "ok"]
+assert len(ok) == 9 and all("error_msg" in r for r in recs), recs
+for r in ok:
+    d = r["partition_date"].isoformat()
+    n = duckdb.sql(
+        f"SELECT count(*) FROM read_parquet({pages.files([d])!r})"
+    ).fetchone()[0]
+    assert r["rows_in"] == r["rows_out"] == n > 0, (d, r, n)
+    assert r["error_msg"] is None, r
+print("surface3 lineage counts OK: rows_in == rows_out == pages rows on",
+      len(ok), "dates")
+EOF
 
 echo "=== surface 4: driver contract (full sweep, sf0.01) ==="
 python scripts/full_sweep.py /root/testdata/sf0.01 2>/dev/null | tail -2

@@ -24,3 +24,18 @@ def spark():
     )
     yield spark
     spark.stop()
+
+
+def spark_jobs(spark, fn):
+    """``(fn(), number of Spark jobs fn launched)``, counted through a job
+    group on the status tracker."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "counted")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

@@ -1,9 +1,13 @@
 """The two-branch skew plan (extract_stage_dispatch) must be a pure
 physical-plan choice: identical output row set to the single-stage plan,
 for any giant_threshold (here forced low so the micro corpus actually
-exercises both branches)."""
+exercises both branches). run_extract drops the giant branch when the
+pages footers prove no payload reaches the threshold; both plans must
+emit the same rows."""
 
 from __future__ import annotations
+
+from pyspark.sql import functions as F
 
 from pdf_extractor_spark.operators.extract import (
     extract_stage,
@@ -68,3 +72,122 @@ def test_slim_schema_matches_full_modulo_blocks(spark):
         for r in slim_df.collect()
     }
     assert slim == full
+
+
+def _pages_table(spark, tmp_path, name="pages"):
+    from pdf_extractor_spark.sources.pages import ingest_corpus_to_icetable
+
+    return ingest_corpus_to_icetable(
+        spark, GOLDEN_DIR / "pages_micro.parquet", tmp_path / name
+    )
+
+
+def _chunk_plan(spark, pages):
+    """run_extract's dispatch plan for one chunk of every date, and the
+    footer bound it was chosen by."""
+    from pdf_extractor_spark.plans.extract_plan import _dispatch_plan
+
+    dates = pages.partitions()
+    _, bound = pages.footer_sizes(dates, "html")
+    src = pages.read(spark, partitions=dates)
+    return _dispatch_plan(src, bound, True), bound
+
+
+def test_giant_free_chunk_plans_no_exchange(spark, tmp_path):
+    from tests.test_plans import plan_of
+
+    from pdf_extractor_spark.operators.extract import GIANT_THRESHOLD_BYTES
+
+    df, bound = _chunk_plan(spark, _pages_table(spark, tmp_path))
+    assert bound is not None and bound < GIANT_THRESHOLD_BYTES
+    assert "Exchange" not in plan_of(df)
+
+
+def test_giant_chunk_keeps_repartitioned_branch(spark, tmp_path):
+    """One payload above the threshold puts the footer bound above it,
+    so the chunk keeps the two-branch plan with its giant shuffle."""
+    import datetime as dt
+
+    from tests.test_plans import plan_of
+
+    from pdf_extractor_spark.operators.extract import GIANT_THRESHOLD_BYTES
+    from pdf_extractor_spark.tables.icetable import IceTable
+
+    pages = IceTable(tmp_path / "pages")
+    giant = b"<p>" + b"a" * GIANT_THRESHOLD_BYTES + b"</p>"
+    pages.append(
+        spark.createDataFrame(
+            [
+                ("http://giant.example/", dt.datetime(2025, 6, 1), giant),
+                ("http://tiny.example/", dt.datetime(2025, 6, 1), b"<p>hi</p>"),
+            ],
+            "url string, warc_ts timestamp, html binary",
+        ).withColumn("partition_date", F.to_date("warc_ts"))
+    )
+    df, bound = _chunk_plan(spark, pages)
+    assert bound >= GIANT_THRESHOLD_BYTES
+    assert "RoundRobinPartitioning" in plan_of(df)
+
+
+def test_footer_without_html_falls_back_to_dispatch(spark, tmp_path):
+    """Files written before ``html`` existed give no bound on it, so the
+    chunk keeps the two-branch plan."""
+    import datetime as dt
+
+    from tests.test_plans import plan_of
+
+    from pdf_extractor_spark.tables.icetable import IceTable
+
+    pages = IceTable(tmp_path / "pages")
+    ts = dt.datetime(2025, 6, 1)
+    pages.append(
+        spark.createDataFrame(
+            [("http://old.example/", ts)], "url string, warc_ts timestamp"
+        ).withColumn("partition_date", F.to_date("warc_ts"))
+    )
+    pages.append(
+        spark.createDataFrame(
+            [("http://new.example/", ts, b"<p>hi</p>")],
+            "url string, warc_ts timestamp, html binary",
+        ).withColumn("partition_date", F.to_date("warc_ts"))
+    )
+    df, bound = _chunk_plan(spark, pages)
+    assert bound is None
+    assert "RoundRobinPartitioning" in plan_of(df)
+    rows = {r.url: r.doc_type for r in df.collect()}
+    assert rows == {"http://old.example/": "empty", "http://new.example/": "html"}
+
+
+def test_plain_and_dispatch_plans_byte_identical(spark, tmp_path):
+    from pdf_extractor_spark.plans.extract_plan import _dispatch_plan
+
+    pages = _pages_table(spark, tmp_path)
+    src = pages.read(spark)
+    _, bound = pages.footer_sizes(pages.partitions(), "html")
+
+    def rows(df):
+        return sorted(
+            (r.url, r.extracted_text, r.doc_type, r.error)
+            for r in df.collect()
+        )
+
+    plain = rows(_dispatch_plan(src, bound, True))
+    assert len(plain) == src.count()
+    assert plain == rows(_dispatch_plan(src, None, True))
+
+
+def test_giant_free_chunk_is_one_spark_job(spark, tmp_path):
+    """run_extract on a giant-free chunk launches exactly one Spark job,
+    the commit's write: no schema inference, no giant shuffle, no
+    recount."""
+    from tests.conftest import spark_jobs
+
+    from pdf_extractor_spark.plans.extract_plan import run_extract
+
+    pages = _pages_table(spark, tmp_path)
+    res, jobs = spark_jobs(
+        spark,
+        lambda: run_extract(spark, pages, str(tmp_path / "wh"), max_dates=2),
+    )
+    assert len(res.processed) == 2 and not res.failed
+    assert jobs == 2

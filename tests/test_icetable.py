@@ -255,3 +255,60 @@ def test_tagged_snapshot_survives_expiry(spark, tbl):
     stats = tbl.expire_snapshots(keep_last=1)
     assert stats["snapshots"] == 1  # snap 0 reclaimed now
     assert not (tbl.meta_dir / "snap-00000000.json").exists()
+
+
+def test_unevolved_read_is_schema_bound(spark, tbl):
+    """An unevolved table's read binds the snapshot's tracked schema, so
+    it launches no schema-inference job, and reads back exactly what
+    footer inference gave: same columns, order and types, with a
+    ``partition_date`` written as a string still inferred as DATE from
+    the directory names."""
+    from tests.conftest import spark_jobs
+
+    tbl.append(_df(spark, [(1, "a", "2025-06-14"), (2, "b", "2025-06-15")]))
+    tbl.append(_df(spark, [(3, "c", "2025-06-15")]))
+    got, jobs = spark_jobs(spark, lambda: tbl.read(spark))
+    assert jobs == 0
+    inferred = spark.read.option("basePath", str(tbl.data_dir)).parquet(
+        *tbl.files()
+    )
+    assert got.dtypes == inferred.dtypes
+    assert dict(got.dtypes)["partition_date"] == "date"
+    assert sorted(got.collect()) == sorted(inferred.collect())
+    pruned, jobs = spark_jobs(
+        spark, lambda: tbl.read(spark, partitions=["2025-06-15"])
+    )
+    assert jobs == 0 and pruned.dtypes == inferred.dtypes
+    assert sorted(r.id for r in pruned.collect()) == [2, 3]
+
+
+def test_footer_sizes_rows_and_payload_bound(spark, tbl):
+    """Row counts per partition and the payload bound come from footers
+    alone: the bound covers the longest value, and a column absent from
+    the files gives no bound."""
+    tbl.append(
+        spark.createDataFrame(
+            [(1, "x" * 5000, "2025-06-14"), (2, "y", "2025-06-14"),
+             (3, "z", "2025-06-15")],
+            "id int, v string, partition_date string",
+        )
+    )
+    rows, bound = tbl.footer_sizes(["2025-06-14", "2025-06-15"], "v")
+    assert rows == {"2025-06-14": 2, "2025-06-15": 1}
+    assert bound >= 5000
+    assert tbl.footer_sizes(["2025-06-15"], "v")[1] < 5000
+    assert tbl.footer_sizes(["2025-06-14"], "html")[1] is None
+    # a partition with no files holds no rows and bounds nothing
+    assert tbl.footer_sizes(["1999-01-01"], "v") == ({"1999-01-01": 0}, 0)
+
+
+def test_footer_sizes_unreadable_footer_is_unknown(spark, tmp_path):
+    other = IceTable(tmp_path / "broken")
+    other.append(_df(spark, [(1, "a", "2025-06-14"), (2, "b", "2025-06-15")]))
+    (bad,) = other.files(["2025-06-15"])
+    with open(bad, "wb") as f:
+        f.write(b"not parquet")
+    assert other.footer_sizes(["2025-06-14", "2025-06-15"], "v") == (
+        {"2025-06-14": 1, "2025-06-15": None},
+        None,
+    )

@@ -124,3 +124,18 @@ def test_where_on_added_column_is_exact(spark, tbl):
     tbl.append(_df3(spark, [(2, "b", 7, "2025-06-14")]))
     got = tbl.read(spark, where=[("id", ">=", 1)]).filter(F.col("w") == 7)
     assert [r.id for r in got.collect()] == [2]
+
+
+def test_evolved_read_is_the_merge_schema_read(spark, tbl):
+    """Evolved tables keep the footer-merging read: the same schema and
+    rows as Spark's own mergeSchema scan of the live files."""
+    tbl.append(_df2(spark, [(1, "a", "2025-06-14")]))
+    tbl.append(_df3(spark, [(2, "b", 7, "2025-06-15")]))
+    got = tbl.read(spark)
+    merged = (
+        spark.read.option("basePath", str(tbl.data_dir))
+        .option("mergeSchema", "true")
+        .parquet(*tbl.files())
+    )
+    assert got.dtypes == merged.dtypes
+    assert sorted(got.collect()) == sorted(merged.collect())

@@ -40,6 +40,17 @@ def _extracted_rows(spark, wh):
     )
 
 
+def _rows_per_date(df):
+    from pyspark.sql import functions as F
+
+    return {
+        r[0]: r[1]
+        for r in df.groupBy(F.col("partition_date").cast("string"))
+        .count()
+        .collect()
+    }
+
+
 def _append_day(spark, corpus, pages, from_date, shift_days=0, n=6):
     """Append ``n`` corpus rows of ``from_date`` under new urls, moved
     ``shift_days`` later (0 = into the same date)."""
@@ -121,13 +132,15 @@ def test_lineage_rows_complete(spark, pages_tbl, tmp_path):
     recs = LineageLog(f"{wh}/lineage").records()
     assert len(recs) == N_DAYS
     manifests = pages_tbl.partition_manifests()
+    pages_rows = _rows_per_date(pages_tbl.read(spark))
     for r in recs:
         assert r["status"] == "ok"
         assert r["extractor_version"] == EXTRACTOR_VERSION
         assert r["input_snapshot_id"] == pages_tbl.snapshot_id()
         date = r["partition_date"].isoformat()
         assert r["input_manifest"] == manifests[date]
-        assert r["rows_out"] > 0
+        assert r["rows_in"] == r["rows_out"] == pages_rows[date] > 0
+        assert r["error_msg"] is None
         assert r["wall_time_s"] > 0
 
 
@@ -488,3 +501,138 @@ def test_sort_clustered_optimize_after_extract(spark, pages_tbl, tmp_path):
     # extraction resume is unaffected by the maintenance rewrite
     r2 = run_extract(spark, pages_tbl, wh, salt=False)
     assert r2.processed == [] and len(r2.skipped) == N_DAYS
+
+
+def test_row_drop_fails_chunk_with_reason(
+    spark, pages_tbl, tmp_path, monkeypatch
+):
+    """A row lost between the scan and the commit is caught: rows_in is
+    counted from the pages footers, not copied from the output, so the
+    chunk fails, its lineage row says why, and the next run re-extracts
+    the date."""
+    from pyspark.sql import functions as F
+
+    from pdf_extractor_spark.plans import extract_plan
+
+    wh = str(tmp_path / "wh")
+    dates = pages_tbl.partitions()
+    n_in = _rows_per_date(pages_tbl.read(spark))[dates[1]]
+    victim = (
+        pages_tbl.read(spark, partitions=[dates[1]]).select("url").first()[0]
+    )
+
+    def dropping(stage):
+        def run(src, **kw):
+            return stage(src.filter(F.col("url") != victim), **kw)
+
+        return run
+
+    for name in ("extract_stage", "extract_stage_dispatch"):
+        monkeypatch.setattr(
+            extract_plan, name, dropping(getattr(extract_plan, name))
+        )
+    r1 = run_extract(spark, pages_tbl, wh, salt=False)
+    assert r1.failed == [dates[1]]
+    assert r1.processed == [d for d in dates if d != dates[1]]
+    failed = [
+        r for r in LineageLog(f"{wh}/lineage").records()
+        if r["status"] == "failed"
+    ]
+    assert [r["partition_date"].isoformat() for r in failed] == [dates[1]]
+    msg = failed[0]["error_msg"]
+    assert msg.startswith("LineageMismatchError: ")
+    assert f"rows_in={n_in} " in msg and f"rows_out={n_in - 1} " in msg
+
+    monkeypatch.undo()
+    r2 = run_extract(spark, pages_tbl, wh, salt=False)
+    assert r2.processed == [dates[1]] and not r2.failed
+    ok = [
+        r for r in LineageLog(f"{wh}/lineage").records()
+        if r["status"] == "ok" and r["partition_date"].isoformat() == dates[1]
+    ]
+    assert len(ok) == 1
+    assert ok[0]["rows_in"] == ok[0]["rows_out"] == n_in
+    assert ok[0]["attempt"] == 2
+
+
+def test_attempts_across_fail_and_resume(
+    spark, pages_tbl, tmp_path, corpus, monkeypatch
+):
+    """Attempt numbers count every earlier lineage row of the date, and
+    each run reads the lineage log once, whatever its number of dates."""
+    wh = str(tmp_path / "wh")
+    dates = pages_tbl.partitions()
+    reads = []
+    records = LineageLog.records
+
+    def counted(self):
+        reads.append(1)
+        return records(self)
+
+    monkeypatch.setattr(LineageLog, "records", counted)
+    for _ in range(2):  # the first chunk fails, which stops the run
+        with pytest.raises(RuntimeError, match="injected"):
+            run_extract(spark, pages_tbl, wh, salt=False, fail_dates={dates[0]})
+    run_extract(spark, pages_tbl, wh, salt=False)
+    _append_day(spark, corpus, pages_tbl, dates[2])
+    run_extract(spark, pages_tbl, wh, salt=False)
+    assert len(reads) == 4  # one read per run
+
+    got = sorted(
+        (r["partition_date"].isoformat(), r["attempt"], r["status"])
+        for r in records(LineageLog(f"{wh}/lineage"))
+    )
+    assert got == sorted(
+        [(dates[0], 1, "failed"), (dates[0], 2, "failed"),
+         (dates[0], 3, "ok"), (dates[1], 1, "ok"), (dates[2], 1, "ok"),
+         (dates[3], 1, "ok"), (dates[2], 2, "ok")]
+    )
+    failed = [
+        r["error_msg"] for r in records(LineageLog(f"{wh}/lineage"))
+        if r["status"] == "failed"
+    ]
+    assert all(m.startswith("RuntimeError: injected failure") for m in failed)
+
+
+def test_zero_row_pending_date(spark, pages_tbl, tmp_path):
+    """A pending date whose input holds no rows (an upsert moved every
+    url away) commits an ok lineage row with zero rows in and out; the
+    observed counts must arrive even though the chunk's scan is empty."""
+    import threading
+
+    from pyspark.sql import functions as F
+
+    wh = str(tmp_path / "wh")
+    run_extract(spark, pages_tbl, wh, salt=False)
+    dates = pages_tbl.partitions()
+    moved = (
+        pages_tbl.read(spark, partitions=[dates[0]])
+        .withColumn("warc_ts", F.col("warc_ts") + F.expr("INTERVAL 40 DAYS"))
+        .withColumn("partition_date", F.to_date("warc_ts"))
+    )
+    pages_tbl.upsert(spark, moved, keys=["url"])
+    assert pages_tbl.footer_sizes([dates[0]], "html")[0] == {dates[0]: 0}
+    new_date = pages_tbl.partitions()[-1]
+
+    out = {}
+    run = threading.Thread(
+        target=lambda: out.setdefault(
+            "r", run_extract(spark, pages_tbl, wh, salt=False)
+        ),
+        daemon=True,
+    )
+    run.start()
+    run.join(timeout=600)
+    assert not run.is_alive(), "run_extract blocked on an empty chunk"
+    assert out["r"].processed == [dates[0], new_date] and not out["r"].failed
+    latest = {
+        r["partition_date"].isoformat(): r
+        for r in LineageLog(f"{wh}/lineage").records()
+        if r["input_manifest"] == pages_tbl.partition_manifests().get(
+            r["partition_date"].isoformat()
+        )
+    }
+    assert latest[dates[0]]["status"] == "ok"
+    assert latest[dates[0]]["rows_in"] == latest[dates[0]]["rows_out"] == 0
+    n_moved = moved.count()
+    assert latest[new_date]["rows_in"] == latest[new_date]["rows_out"] == n_moved
