@@ -68,20 +68,21 @@ SLIM_SCHEMA = T.StructType(
 def byte_bounded_ranges(batch, col: str = "html"):
     """Yield (lo, hi) row ranges of an Arrow batch re-chunked by
     cumulative payload BYTES (skew/memory bound): one batch of giant
-    blobs must not expand into worker memory at once. Shared by every
-    payload-consuming mapInArrow stage (extraction, outlinks)."""
+    blobs must not expand into worker memory at once. A range ends at
+    the first row that brings its bytes to BATCH_TARGET_BYTES (nulls
+    count 0). Shared by every payload-consuming mapInArrow stage
+    (extraction, outlinks, images)."""
+    import numpy as np
+    import pyarrow.compute as pc
+
     n = batch.num_rows
-    payload = batch.column(col)
-    start = 0
-    acc = 0
-    for i in range(n):
-        v = payload[i]
-        acc += len(v.as_buffer()) if v.is_valid else 0
-        if acc >= BATCH_TARGET_BYTES and i + 1 > start:
-            yield start, i + 1
-            start, acc = i + 1, 0
-    if start < n:
-        yield start, n
+    sizes = pc.binary_length(batch.column(col)).fill_null(0)
+    ends = np.cumsum(sizes.to_numpy(zero_copy_only=False), dtype=np.int64)
+    start, base = 0, 0
+    while start < n:
+        hi = min(n, int(np.searchsorted(ends, base + BATCH_TARGET_BYTES)) + 1)
+        yield start, hi
+        start, base = hi, int(ends[hi - 1])
 
 
 def _make_extract_batches(with_blocks: bool):

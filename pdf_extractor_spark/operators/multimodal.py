@@ -46,7 +46,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-BATCH_TARGET_BYTES = 32 * 1024 * 1024
+from pdf_extractor_spark.operators.extract import byte_bounded_ranges
 
 RAWV_MAGIC = b"RAWV"
 
@@ -203,20 +203,6 @@ FRAMES_SCHEMA = T.StructType(
 )
 
 
-def _chunk_indices(payload_col, n: int):
-    """Yield (lo, hi) index ranges bounded by cumulative payload bytes."""
-    start = 0
-    acc = 0
-    for i in range(n):
-        v = payload_col[i]
-        acc += len(v.as_buffer()) if v.is_valid else 0
-        if acc >= BATCH_TARGET_BYTES and i + 1 > start:
-            yield start, i + 1
-            start, acc = i + 1, 0
-    if start < n:
-        yield start, n
-
-
 def _media_map(per_row, out_schema_names, out_types):
     """Build a mapInArrow fn applying ``per_row(payload) -> tuple`` with
     per-row error containment (O23): a failing element yields nulls + the
@@ -228,7 +214,7 @@ def _media_map(per_row, out_schema_names, out_types):
         for batch in batches:
             payload = batch.column("payload")
             ids = batch.column("media_id")
-            for lo, hi in _chunk_indices(payload, batch.num_rows):
+            for lo, hi in byte_bounded_ranges(batch, "payload"):
                 cols = [[] for _ in out_types]
                 errs = []
                 for i in range(lo, hi):

@@ -218,8 +218,9 @@ def run_extract(
                 observed, *_count_per_date(chunk, error)
             )
             # ONE atomic commit replaces every partition in the chunk —
-            # readers see all K new dates or none
-            extracted_tbl.overwrite_partitions(out)
+            # readers see all K new dates or none; a date whose pages
+            # lost every row commits empty instead of keeping old rows
+            extracted_tbl.overwrite_partitions(out, partitions=chunk)
             if fail_dates and set(chunk) & fail_dates:
                 raise RuntimeError(f"injected failure in chunk {chunk}")
             counts = observed.get

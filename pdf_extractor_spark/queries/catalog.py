@@ -884,25 +884,36 @@ FROM scored
 # bare string would silently merge distinct training images site- and
 # even web-wide. (page url, src) is the conservative choice for a
 # downloader manifest — it can keep a duplicate (same nav logo reached
-# from two pages), it can never DROP a distinct image.
-_SRC_FALLBACK = "concat(url, '#', url_src)"
+# from two pages), it can never DROP a distinct image. The page url's
+# length prefix makes the key unambiguous: a bare concat(url, '#', src)
+# keys page 'a#b' + src 'c' and page 'a' + src 'b#c' alike. length()
+# counts characters on both engines.
+_SRC_FALLBACK = "concat(CAST(length(url) AS STRING), ':', url, '#', url_src)"
+
+
+def _src_canon_sql(duckdb: bool) -> str:
+    """The src canon-key expression over (url, url_src, scheme, host0,
+    rest), rendered for DuckDB or Spark SQL."""
+    from pdf_extractor_spark.queries.urlnorm import _canon_sql, _TRACK_RE
+
+    if duckdb:
+        return _canon_sql(
+            "string_split", "list_filter",
+            f"regexp_matches(p, '{_TRACK_RE}')", "array_to_string",
+            fallback=_SRC_FALLBACK,
+        )
+    return _canon_sql(
+        "split", "filter", f"p rlike '{_TRACK_RE}'", "array_join",
+        fallback=_SRC_FALLBACK,
+    )
 
 
 def _src_canon_of(kept: DataFrame) -> DataFrame:
     """(url, seq, src) → (url, seq, src_canon): the urlnorm canon key
     over the img src, page-scoped for scheme-less srcs."""
-    from pdf_extractor_spark.queries.urlnorm import (
-        _canon_sql,
-        _TRACK_RE,
-        host0_of,
-        rest_of,
-        scheme_of,
-    )
+    from pdf_extractor_spark.queries.urlnorm import host0_of, rest_of, scheme_of
 
-    canon_s = _canon_sql(
-        "split", "filter", f"p rlike '{_TRACK_RE}'", "array_join",
-        fallback=_SRC_FALLBACK,
-    )
+    canon_s = _src_canon_sql(duckdb=False)
     return kept.select(
         "url",
         "seq",
@@ -939,19 +950,9 @@ def image_pairs_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _image_pairs_dedup_sql() -> str:
-    from pdf_extractor_spark.queries.urlnorm import (
-        _canon_sql,
-        _TRACK_RE,
-        host0_of,
-        rest_of,
-        scheme_of,
-    )
+    from pdf_extractor_spark.queries.urlnorm import host0_of, rest_of, scheme_of
 
-    canon_d = _canon_sql(
-        "string_split", "list_filter",
-        f"regexp_matches(p, '{_TRACK_RE}')", "array_to_string",
-        fallback=_SRC_FALLBACK,
-    )
+    canon_d = _src_canon_sql(duckdb=True)
     return f"""
 WITH quality AS ({_image_caption_quality_sql()}),
 kept AS (SELECT * FROM quality WHERE keep = 1),

@@ -129,6 +129,10 @@ class _BlockParser(HTMLParser):
     """Single-pass block segmenter. Produces raw block tuples; scoring and
     the keep decision happen in :func:`extract_html`."""
 
+    # tags whose attrs handle_starttag reads (class/id); `_fast_parse`
+    # collects attribute values for these tags only
+    ATTR_TAGS = BLOCK_TAGS
+
     def __init__(self) -> None:
         super().__init__(convert_charrefs=True)
         self.stack: list[_Frame] = []
@@ -264,18 +268,21 @@ class _BlockParser(HTMLParser):
 # ---------------------------------------------------------------------------
 # Fast tokenizer: a single-pass transcription of stdlib html.parser's
 # goahead()/parse_*() for the feed-once-then-close usage, driving the SAME
-# _BlockParser callbacks with byte-identical semantics. It reuses the
-# stdlib's own compiled regexes (so tokenization boundaries are identical
-# by construction) and drops what we never use: line/offset bookkeeping
-# (updatepos was pure overhead), incremental-buffer suspend/resume (we
-# always have the whole document; "incomplete at buffer end" constructs
-# take stdlib's end-of-input path immediately), comment/decl/PI payload
-# slicing (our handlers are no-ops for them), and attribute collection for
-# tags whose attrs the handlers never read (only BLOCK_TAGS use class/id;
-# the attr REGEX loop still runs for every tag because the stdlib's
-# where-does-this-tag-end decision depends on it). Identity to the stdlib
-# path is enforced by tests/test_differential.py (millions of fuzzed
-# payloads via scripts/fuzz_tokenizer.py) and the golden corpus.
+# handler callbacks with byte-identical semantics. Every HTML payload stage
+# runs on it: extraction (_BlockParser), outlinks (links._LinkParser) and
+# image captions (images._ImgParser). It reuses the stdlib's own compiled
+# regexes (so tokenization boundaries are identical by construction) and
+# drops what no handler uses: line/offset bookkeeping (updatepos was pure
+# overhead), incremental-buffer suspend/resume (we always have the whole
+# document; "incomplete at buffer end" constructs take stdlib's
+# end-of-input path immediately), comment/decl/PI payload slicing (every
+# handler is a no-op for them), and attribute collection for tags whose
+# attrs the handler never reads (a handler names the tags it reads attrs
+# of in its ATTR_TAGS; the attr REGEX loop still runs for every tag
+# because the stdlib's where-does-this-tag-end decision depends on it).
+# Identity to the stdlib-driven handlers is enforced by
+# tests/test_differential.py (millions of fuzzed payloads via
+# scripts/fuzz_tokenizer.py, all three handlers) and the golden corpus.
 import _markupbase as _mb
 import html.parser as _hp
 from html import unescape as _unescape
@@ -350,9 +357,13 @@ def _assert_stdlib_transcription_assumptions() -> None:
 _assert_stdlib_transcription_assumptions()
 
 
-def _fast_parse(text: str, p: _BlockParser) -> None:  # noqa: C901
+def _fast_parse(text: str, p: HTMLParser) -> None:  # noqa: C901
+    """Drive ``p``'s ``handle_*`` callbacks over ``text`` exactly as
+    stdlib ``HTMLParser.feed(text)`` then ``HTMLParser.close()`` would;
+    ``p.ATTR_TAGS`` names the tags whose attribute values it reads."""
     n = len(text)
     i = 0
+    attr_tags = p.ATTR_TAGS
     handle_data = p.handle_data
     handle_starttag = p.handle_starttag
     handle_endtag = p.handle_endtag
@@ -414,9 +425,9 @@ def _fast_parse(text: str, p: _BlockParser) -> None:  # noqa: C901
             if rest_txt != ">" and rest_txt != "/>":
                 # only now can the tag have attributes — run the stdlib
                 # attr loop (its end-of-tag decision depends on it), but
-                # collect values only for tags whose attrs the handlers
-                # read (class/id on BLOCK_TAGS)
-                collect = tag in BLOCK_TAGS
+                # collect values only for tags whose attrs the handler
+                # reads
+                collect = tag in attr_tags
                 while k < endpos:
                     am = attrfind(text, k)
                     if not am:

@@ -7,9 +7,10 @@ higher-quality upgrade when present).
 The reference pipeline has no image stage (it extracts text from one
 uploaded document per request, /root/reference/pdf_processor.py); this
 is part of the brief's multimodal family. Like the outlink collector
-(``links.py``) it is a deliberately SEPARATE pass from the content
-extractor: it shares the byte-stable decoder and whitespace canon but
-never touches the golden extraction path.
+(``links.py``) it is its own handler (``_ImgParser``) on the
+extractor's fast tokenizer (``_fast_parse``): it shares the byte-stable
+decoder, the tokenizer and the whitespace canon, but none of the block
+state, so the golden extraction path is untouched.
 
 Spec (deterministic, total):
 - only ``<img>`` tags with a non-empty ``src`` count; ``src``-less
@@ -37,12 +38,15 @@ from html.parser import HTMLParser
 
 from pdf_extractor_spark.ref_extractor.dispatch import PDF_MAGIC
 from pdf_extractor_spark.ref_extractor.html_extract import (
+    _fast_parse,
     canon_ws,
     detect_and_decode,
 )
 
 
 class _ImgParser(HTMLParser):
+    ATTR_TAGS = frozenset({"img"})  # src and alt are the only attrs read
+
     def __init__(self) -> None:
         super().__init__(convert_charrefs=True)
         # (seq, src, alt, caption, caption_src) — emission order varies,
@@ -115,8 +119,7 @@ def collect_images(
     text = detect_and_decode(payload)
     p = _ImgParser()
     try:
-        p.feed(text)
-        p.close()
+        _fast_parse(text, p)
     except Exception:  # noqa: BLE001 — O23-style containment
         pass
     p.flush_eof()

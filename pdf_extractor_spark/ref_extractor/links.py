@@ -4,11 +4,12 @@ filtering needs per-page outlinks long before any text model runs).
 
 The reference pipeline has no link stage (it extracts text from one
 uploaded document per request, /root/reference/pdf_processor.py); this
-is part of the brief's web-pipeline family. The collector is a
-deliberately SEPARATE pass from the content extractor: it shares the
-byte-stable decoder (``detect_and_decode``) and whitespace canon
-(``canon_ws``) but never touches the golden extraction path, so the
-byte-identity invariant of extracted text is unaffected.
+is part of the brief's web-pipeline family. The collector is its own
+handler (``_LinkParser``) on the extractor's fast tokenizer
+(``_fast_parse``): it shares the byte-stable decoder
+(``detect_and_decode``), the tokenizer and the whitespace canon
+(``canon_ws``), but none of the block state, so the byte-identity
+invariant of extracted text is unaffected.
 
 Spec (deterministic, total):
 - only ``<a href=...>`` anchors count; an ``<a>`` without href is
@@ -32,12 +33,15 @@ from html.parser import HTMLParser
 
 from pdf_extractor_spark.ref_extractor.dispatch import PDF_MAGIC
 from pdf_extractor_spark.ref_extractor.html_extract import (
+    _fast_parse,
     canon_ws,
     detect_and_decode,
 )
 
 
 class _LinkParser(HTMLParser):
+    ATTR_TAGS = frozenset({"a"})  # href is the only attr read
+
     def __init__(self) -> None:
         super().__init__(convert_charrefs=True)
         self.links: list[tuple[str, str]] = []
@@ -72,8 +76,7 @@ def collect_links(payload: bytes | None) -> list[tuple[int, str, str]]:
     text = detect_and_decode(payload)
     p = _LinkParser()
     try:
-        p.feed(text)
-        p.close()
+        _fast_parse(text, p)
     except Exception:  # noqa: BLE001 — O23-style containment
         pass
     p.flush()

@@ -16,8 +16,9 @@ Semantics (the subset of Iceberg the north_rule needs):
 - readers resolve CURRENT → manifest → explicit file list; a crashed writer
   leaves orphan files but never a corrupt table (commit = one atomic rename);
 - ``append`` adds files; ``overwrite_partitions`` atomically replaces all
-  files of the given partition values (idempotent re-runs of a partition —
-  the checkpoint-resume primitive, SURVEY.md §4.2);
+  files of the given partition values, emptying a named one its input
+  lacks (idempotent re-runs of a partition — the checkpoint-resume
+  primitive, SURVEY.md §4.2);
 - ``read(spark, partitions=[...])`` performs manifest-level partition
   pruning: only the selected partitions' files reach the scan, so Spark
   never opens — or even lists — pruned files. With 10^12 rows across years
@@ -556,15 +557,35 @@ class IceTable:
         }
         return snap_id, abs_added
 
-    def overwrite_partitions(self, df: DataFrame) -> int:
+    def overwrite_partitions(
+        self, df: DataFrame, partitions: list[str] | None = None
+    ) -> int:
         """Atomically replace every partition present in df — the idempotent
-        re-run primitive used by checkpoint-resume."""
+        re-run primitive used by checkpoint-resume.
+
+        ``partitions`` names the exact set to replace instead: an existing
+        named partition df holds no row of commits EMPTY (as ``upsert``
+        does), so a re-run over an input partition that lost every row
+        cannot leave its old rows behind; a row of df outside the set
+        raises before anything is committed."""
         added = self._stage_write(df)
+        if partitions is not None:
+            stray = sorted(set(added) - set(partitions))
+            if stray:
+                for fs in added.values():
+                    for f in fs:
+                        (self.root / f).unlink(missing_ok=True)
+                raise ValueError(
+                    f"overwrite_partitions: df holds rows of partitions "
+                    f"{stray} outside the named set {sorted(partitions)}"
+                )
+            added = {p: added.get(p, []) for p in partitions}
         with self.commit_lock:
             prev = self.current_snapshot()
             parts: dict = dict(prev["partitions"]) if prev else {}
             for p, fs in added.items():
-                parts[p] = fs  # replaced wholesale
+                if fs or p in parts:
+                    parts[p] = fs  # replaced wholesale
             return self._commit(
                 parts, "overwrite_partitions", df.schema.json()
             )

@@ -5,12 +5,15 @@ path, byte-identical or bust.
 
 Generates adversarial HTML payloads (malformed tags, entities, comments,
 marked sections, truncations, non-UTF-8 bytes — every construct the
-tokenizer dispatches on) and asserts `extract_html` (fast) and
-`extract_html_stdlib` produce IDENTICAL results: doc_type, text, every
-block field, and the contained error string for the payloads where the
-parser legitimately raises (marked-section AssertionErrors). Any
-mismatch prints the repro payload and exits nonzero — the gate for
-keeping the fast tokenizer (CLAUDE.md byte-identity invariant).
+tokenizer dispatches on) and asserts that every handler the fast
+tokenizer drives gives IDENTICAL results to the same handler driven by
+the stdlib ``HTMLParser``: `extract_html` vs `extract_html_stdlib`
+(doc_type, text, every block field, and the contained error string for
+the payloads where the parser legitimately raises — marked-section
+AssertionErrors), and `collect_links` / `collect_images` vs the same
+collectors with the stdlib tokenizer swapped in. Any mismatch prints the
+repro payload and exits nonzero — the gate for keeping the fast
+tokenizer (the byte-identity invariant).
 
 tests/test_differential.py runs a smaller deterministic slice of the
 same generator in CI; this script is the million-payload sweep recorded
@@ -19,10 +22,12 @@ in BENCH.md.
 
 from __future__ import annotations
 
+import contextlib
 import multiprocessing as mp
 import pathlib
 import random
 import sys
+from unittest import mock
 
 sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent))
 
@@ -40,12 +45,16 @@ TAGS = [
     "table", "br", "img", "hr", "script", "style", "svg", "noscript",
     "template", "nav", "header", "footer", "aside", "form", "body",
     "html", "head", "title", "meta", "input", "weird-tag", "x:y",
+    "figure", "figcaption", "img", "a",
 ]
 ATTRS = [
     "", " class=content", ' class="main article"', " id=sidebar",
     ' class="nav menu" id="x"', " href=#", ' href="/a?b=1&amp;c=2"',
     " data-x='1'", ' class="a\nb"', " class", " class=", ' class="unterm',
     " =x", " a=b c", " a='it&apos;s'", " /x", ' class="promo"',
+    " src=a.png", ' src="/i.png?w=1&amp;h=2" alt="cat &amp; dog"',
+    " alt='a  caption\n'", " src", ' src=""', " HREF=/x SRC=y.jpg",
+    ' href="/p" href="/q"', " alt=&lt;b&gt;",
 ]
 SPECIALS = [
     "<!-- a comment -->", "<!--unterminated", "<!-- -- >", "<!---->",
@@ -57,6 +66,11 @@ SPECIALS = [
     "< p>", "<>", "<\x00>", "<p/", "<p /", "<p//>", "<p/ >",
     "<a b=c/>", "<a b='c'/>", "<a/b>", "<spa\x00n>", "?>", "]]>",
     "-->", "<\xc3\xa9>",
+    '<figure><img src="f.png" alt="alt text"><figcaption>a &amp; b'
+    "</figcaption></figure>",
+    "<figcaption>first</figcaption><img src=g.gif><figcaption>2nd",
+    '<img src="/x.jpg" alt="  spaced\talt ">', "<img alt=only-alt>",
+    '<a href="/h">anchor <b>text</b>', "<a>no href</a>",
 ]
 
 
@@ -157,20 +171,50 @@ def _outcome(fn, payload: bytes):
         return ("error", "", (), f"{type(e).__name__}: {e}")
 
 
-def check_range(args: tuple[int, int]) -> tuple[int, list[int]]:
-    lo, hi = args
+def _stdlib_drive(text: str, p) -> None:
+    """The oracle tokenizer: the stdlib ``HTMLParser`` driving ``p``."""
+    p.feed(text)
+    p.close()
+
+
+@contextlib.contextmanager
+def stdlib_tokenizer():
+    """Within this block `collect_links` / `collect_images` run their
+    handlers on the stdlib tokenizer instead of `_fast_parse`."""
+    from pdf_extractor_spark.ref_extractor import images, links
+
+    with mock.patch.object(links, "_fast_parse", _stdlib_drive), \
+            mock.patch.object(images, "_fast_parse", _stdlib_drive):
+        yield
+
+
+def outcomes(payload: bytes, stdlib: bool = False) -> tuple:
+    """(extraction, links, images) of one payload on one tokenizer; the
+    stdlib side must run inside `stdlib_tokenizer()`."""
     from pdf_extractor_spark.ref_extractor.html_extract import (
         extract_html,
         extract_html_stdlib,
     )
+    from pdf_extractor_spark.ref_extractor.images import collect_images
+    from pdf_extractor_spark.ref_extractor.links import collect_links
 
-    bad = []
-    for seed in range(lo, hi):
-        payload = make_payload(seed)
-        if _outcome(extract_html, payload) != _outcome(
-            extract_html_stdlib, payload
-        ):
-            bad.append(seed)
+    extract = extract_html_stdlib if stdlib else extract_html
+    return (
+        _outcome(extract, payload),
+        collect_links(payload),
+        collect_images(payload),
+    )
+
+
+def check_range(args: tuple[int, int]) -> tuple[int, list[int]]:
+    lo, hi = args
+    fast = [outcomes(make_payload(seed)) for seed in range(lo, hi)]
+    with stdlib_tokenizer():
+        bad = [
+            seed
+            for seed, got in zip(range(lo, hi), fast)
+            if got != outcomes(make_payload(seed), stdlib=True)
+        ]
     return hi - lo, bad
 
 
@@ -194,7 +238,10 @@ def main() -> None:
         for seed in bad[:3]:
             print(f"  seed {seed}: {make_payload(seed)!r}")
         sys.exit(1)
-    print(f"OK: {done} payloads, fast == stdlib on every one")
+    print(
+        f"OK: {done} payloads, fast == stdlib on every one "
+        "(text, links, images)"
+    )
 
 
 if __name__ == "__main__":

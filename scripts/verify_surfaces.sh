@@ -121,6 +121,50 @@ for r in ok:
 print("surface3 lineage counts OK: rows_in == rows_out == pages rows on",
       len(ok), "dates")
 EOF
+# the output is a function of the input snapshot: an upsert moves every
+# url of the oldest date to a new date, the re-run extracts both (the
+# emptied one to zero rows), and the live extracted files must then hold
+# exactly the pages urls, each once
+MOVED=$(python - <<'EOF' 2>/dev/null
+import datetime as dt
+from pyspark.sql import SparkSession, functions as F
+from pdf_extractor_spark.tables.icetable import IceTable
+spark = (SparkSession.builder.master("local[2]")
+         .config("spark.ui.enabled", "false")
+         .config("spark.sql.session.timeZone", "UTC").getOrCreate())
+pages = IceTable("/tmp/vwh/pages")
+old, last = pages.partitions()[0], pages.partitions()[-1]
+shift = (dt.date.fromisoformat(last) - dt.date.fromisoformat(old)).days + 1
+moved = (pages.read(spark, partitions=[old])
+         .withColumn("warc_ts", F.col("warc_ts") + F.expr(f"INTERVAL {shift} DAYS"))
+         .withColumn("partition_date", F.to_date("warc_ts")))
+pages.upsert(spark, moved, keys=["url"])
+spark.stop()
+print(old, pages.partitions()[-1])
+EOF
+)
+python -m pdf_extractor_spark.jobs.extract_job \
+  --pages /tmp/vg/pages_micro.parquet --warehouse /tmp/vwh 2>/dev/null | tail -1 \
+  | MOVED="$MOVED" python -c "import os, sys, json; \
+d = json.loads(sys.stdin.read()); \
+assert d['processed'] == os.environ['MOVED'].split() and not d['failed'], d; \
+print('surface3 emptied-date re-run OK: processed', d['processed'])"
+python - <<'EOF'
+import duckdb
+from pdf_extractor_spark.tables.icetable import IceTable
+pages = IceTable("/tmp/vwh/pages").files()
+ext = IceTable("/tmp/vwh/extracted").files()
+p = duckdb.sql(f"SELECT count(*), count(DISTINCT url) FROM read_parquet({pages!r})").fetchone()
+e = duckdb.sql(f"SELECT count(*), count(DISTINCT url) FROM read_parquet({ext!r})").fetchone()
+diff = duckdb.sql(
+    f"SELECT count(*) FROM ((SELECT url FROM read_parquet({ext!r}) "
+    f"EXCEPT SELECT url FROM read_parquet({pages!r})) UNION ALL "
+    f"(SELECT url FROM read_parquet({pages!r}) "
+    f"EXCEPT SELECT url FROM read_parquet({ext!r})))"
+).fetchone()[0]
+assert e == p and p[0] == p[1] and diff == 0, (e, p, diff)
+print("surface3 whole-table OK: extracted rows == distinct urls == pages rows ==", p[0])
+EOF
 
 echo "=== surface 4: driver contract (full sweep, sf0.01) ==="
 python scripts/full_sweep.py /root/testdata/sf0.01 2>/dev/null | tail -2

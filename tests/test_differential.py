@@ -6,12 +6,15 @@ odd bytes, non-UTF8) that family-based goldens would miss."""
 from __future__ import annotations
 
 import datetime as dt
+import pathlib
 import random
 
 from pyspark.sql import types as T
 
 from pdf_extractor_spark.operators.extract import extract_stage
 from pdf_extractor_spark.ref_extractor import extract
+
+REPO = pathlib.Path(__file__).resolve().parent.parent
 
 SCHEMA = T.StructType(
     [
@@ -47,10 +50,11 @@ def _payloads() -> list[bytes | None]:
 
 def test_fast_tokenizer_matches_stdlib_parser():
     """CI slice of the million-payload tokenizer fuzz (the full sweep is
-    scripts/fuzz_tokenizer.py, run at every tokenizer change): the fast
-    single-pass tokenizer must be byte-identical to the stdlib
-    html.parser path — doc_type, text, every block field, and contained
-    error strings — on adversarial HTML."""
+    scripts/fuzz_tokenizer.py, run at every tokenizer change): on
+    adversarial HTML, every handler the fast single-pass tokenizer
+    drives must be byte-identical to the same handler on the stdlib
+    html.parser — extraction (doc_type, text, every block field,
+    contained error strings), outlinks and image-caption pairs."""
     from scripts.fuzz_tokenizer import check_range, make_payload
 
     n, bad = check_range((0, 30_000))
@@ -59,6 +63,39 @@ def test_fast_tokenizer_matches_stdlib_parser():
         f"tokenizer divergence at seeds {bad[:5]}: "
         f"{[make_payload(s) for s in bad[:2]]!r}"
     )
+
+
+def test_collectors_match_stdlib_on_generator_mix_with_giant():
+    """`collect_links` / `collect_images` on the fast tokenizer equal the
+    stdlib-tokenizer oracle on a generator mix with one giant HTML blob,
+    plus the link and figure fixtures (real anchor/img/figcaption
+    markup). The outlinks benchmark gate compares the Spark stage with
+    in-process `collect_links`, which is the fast path itself; this test
+    is what ties both to the stdlib tokenizer."""
+    import pyarrow.parquet as pq
+
+    from pdf_extractor_spark.corpus.generator import generate_rows
+    from pdf_extractor_spark.ref_extractor.images import collect_images
+    from pdf_extractor_spark.ref_extractor.links import collect_links
+    from scripts.fuzz_tokenizer import stdlib_tokenizer
+
+    rows = list(generate_rows(7, 600, 4, giant_html=1))
+    assert rows[-1].family == "E4h" and len(rows[-1].html) > 4 * 2**20
+    payloads = [r.html for r in rows]
+    for name in ("linkpages_micro", "figpages_micro"):
+        table = pq.read_table(REPO / "fixtures" / f"{name}.parquet")
+        payloads += table.column("html").to_pylist()
+
+    def collect():
+        return [(collect_links(p), collect_images(p)) for p in payloads]
+
+    fast = collect()
+    with stdlib_tokenizer():
+        oracle = collect()
+    assert sum(len(links) for links, _ in fast) > 1000
+    assert sum(len(imgs) for _, imgs in fast) > 50
+    for i, (got, want) in enumerate(zip(fast, oracle)):
+        assert got == want, f"payload {i}: {payloads[i][:80]!r}"
 
 
 def test_spark_stage_matches_pure_python(spark):

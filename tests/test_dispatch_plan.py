@@ -191,3 +191,72 @@ def test_giant_free_chunk_is_one_spark_job(spark, tmp_path):
     )
     assert len(res.processed) == 2 and not res.failed
     assert jobs == 2
+
+
+def _row_loop_ranges(payload, target: int):
+    """The per-row loop ``byte_bounded_ranges`` replaced: the reference
+    its vectorized form must reproduce range for range."""
+    start = acc = 0
+    for i in range(len(payload)):
+        v = payload[i]
+        acc += len(v.as_buffer()) if v.is_valid else 0
+        if acc >= target and i + 1 > start:
+            yield start, i + 1
+            start, acc = i + 1, 0
+    if start < len(payload):
+        yield start, len(payload)
+
+
+def test_byte_bounded_ranges_match_row_loop():
+    """Nulls, empty payloads, a giant at either edge, and rows whose
+    bytes reach BATCH_TARGET_BYTES exactly or stop one byte short."""
+    import pyarrow as pa
+
+    from pdf_extractor_spark.operators.extract import (
+        BATCH_TARGET_BYTES as T,
+        byte_bounded_ranges,
+    )
+
+    giant = b"g" * (T + 1)
+    cases = {
+        "no rows": [],
+        "nulls and empties": [None, b"", None, b"ab", b""],
+        "giant first": [giant, b"a", None, b"bc"],
+        "giant last": [b"a", None, b"", giant],
+        "giants only": [giant, None, giant],
+        "exact crossing": [b"a" * (T - 10), b"b" * 10, b"c", b"d" * (T - 1), b"e"],
+        "one byte short": [b"a" * (T - 10), b"b" * 9, b"c"],
+    }
+    got = {}
+    for name, rows in cases.items():
+        batch = pa.RecordBatch.from_arrays(
+            [pa.array(rows, pa.binary())], names=["html"]
+        )
+        got[name] = list(byte_bounded_ranges(batch))
+        assert got[name] == list(_row_loop_ranges(batch.column("html"), T)), name
+    assert got["exact crossing"] == [(0, 2), (2, 4), (4, 5)]
+
+
+def test_byte_bounded_ranges_match_row_loop_random(monkeypatch):
+    """Random batches against a small target, so most rows straddle,
+    reach or overshoot a range boundary; `col` picks the column."""
+    import random
+
+    import pyarrow as pa
+
+    from pdf_extractor_spark.operators import extract as ex
+
+    monkeypatch.setattr(ex, "BATCH_TARGET_BYTES", 64)
+    rng = random.Random(11)
+    for _ in range(300):
+        rows = [
+            None if rng.random() < 0.15 else b"x" * rng.choice(
+                [0, 1, 7, 32, 63, 64, 65, 200]
+            )
+            for _ in range(rng.randint(0, 40))
+        ]
+        batch = pa.RecordBatch.from_arrays(
+            [pa.array(rows, pa.binary())], names=["payload"]
+        )
+        want = list(_row_loop_ranges(batch.column("payload"), 64))
+        assert list(ex.byte_bounded_ranges(batch, "payload")) == want, rows

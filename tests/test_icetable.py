@@ -46,6 +46,39 @@ def test_overwrite_partition_atomic_idempotent(spark, tbl):
     assert got2 == got
 
 
+def test_overwrite_named_partitions_empties_missing(spark, tbl):
+    """A named partition the DataFrame holds no row of is replaced by
+    nothing (its old rows go); a named partition the table never had
+    and the DataFrame lacks stays absent; unnamed ones are untouched."""
+    tbl.append(
+        _df(spark, [(1, "a", "2025-06-14"), (2, "b", "2025-06-15"),
+                    (3, "c", "2025-06-16")])
+    )
+    tbl.overwrite_partitions(
+        _df(spark, [(9, "z", "2025-06-14")]),
+        partitions=["2025-06-14", "2025-06-15", "2025-06-17"],
+    )
+    assert {(r.id, r.v) for r in tbl.read(spark).collect()} == {
+        (9, "z"), (3, "c")
+    }
+    assert tbl.partitions() == ["2025-06-14", "2025-06-15", "2025-06-16"]
+    assert tbl.files(["2025-06-15"]) == []
+
+
+def test_overwrite_named_partitions_rejects_stray_rows(spark, tbl):
+    """A row outside the named set fails the overwrite before it
+    commits, and its staged files are removed."""
+    tbl.append(_df(spark, [(1, "a", "2025-06-14"), (2, "b", "2025-06-15")]))
+    snap, files = tbl.snapshot_id(), sorted(tbl.data_dir.rglob("*.parquet"))
+    with pytest.raises(ValueError, match="2025-06-15"):
+        tbl.overwrite_partitions(
+            _df(spark, [(9, "z", "2025-06-14"), (8, "y", "2025-06-15")]),
+            partitions=["2025-06-14"],
+        )
+    assert tbl.snapshot_id() == snap
+    assert sorted(tbl.data_dir.rglob("*.parquet")) == files
+
+
 def test_manifest_pruning(spark, tbl):
     tbl.append(
         _df(spark, [(i, "x", f"2025-06-{14 + (i % 3):02d}") for i in range(30)])

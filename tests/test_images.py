@@ -222,3 +222,40 @@ def test_relative_src_is_page_scoped(spark):
         == got[("https://b.example/q", 1)]
         == "https://cdn.example/x.png"
     )
+
+
+def test_relative_src_key_is_unambiguous(spark):
+    """The page-scoped key of a scheme-less src must not collide across
+    (page, src) splits of the same string: page 'a#b' + src 'c' and
+    page 'a' + src 'b#c' are different images. The DuckDB rendering of
+    the key must equal Spark's, non-ASCII page urls included."""
+    import duckdb
+
+    from pdf_extractor_spark.queries.catalog import _src_canon_of
+    from pdf_extractor_spark.queries.urlnorm import (
+        host0_of,
+        rest_of,
+        scheme_of,
+    )
+
+    rows = [
+        ("a#b", 0, "c"),
+        ("a", 0, "b#c"),
+        ("https://é.example/ñ", 0, "img/ü.png"),
+        ("https://x.example/p", 1, "HTTPS://CDN.example/x.png?utm_a=1"),
+    ]
+    kept = spark.createDataFrame(rows, "url string, seq int, src string")
+    got = {(r.url, r.seq): r.src_canon for r in _src_canon_of(kept).collect()}
+    assert got[("a#b", 0)] != got[("a", 0)]
+
+    from pdf_extractor_spark.queries.catalog import _src_canon_sql
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE kept (url VARCHAR, seq INTEGER, src VARCHAR)")
+    con.executemany("INSERT INTO kept VALUES (?, ?, ?)", rows)
+    oracle = con.execute(
+        f"SELECT url, seq, {_src_canon_sql(duckdb=True)} FROM ("
+        f"SELECT url, seq, src AS url_src, {scheme_of('src')} AS scheme, "
+        f"{host0_of('src')} AS host0, {rest_of('src')} AS rest FROM kept)"
+    ).fetchall()
+    assert {(u, q): k for u, q, k in oracle} == got

@@ -636,3 +636,9 @@ def test_zero_row_pending_date(spark, pages_tbl, tmp_path):
     assert latest[dates[0]]["rows_in"] == latest[dates[0]]["rows_out"] == 0
     n_moved = moved.count()
     assert latest[new_date]["rows_in"] == latest[new_date]["rows_out"] == n_moved
+    # the output is a function of the input snapshot: the emptied date
+    # keeps none of its old rows, so no moved url appears twice
+    got = [r.url for r in _read_extracted(spark, wh).select("url").collect()]
+    want = [r.url for r in pages_tbl.read(spark).select("url").collect()]
+    assert len(got) == len(set(got)) and sorted(got) == sorted(want)
+    assert _rows_per_date(_read_extracted(spark, wh)).get(dates[0], 0) == 0
