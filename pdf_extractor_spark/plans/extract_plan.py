@@ -7,6 +7,8 @@ Physical shape per chunk of pending partition-dates::
     IceTable scan (manifest-pruned to the chunk's dates)  -- no file listing,
                                                               schema bound
     → Project(url, warc_ts, html)                          -- column pruning
+    → url_filter: observe(rejects per date), then drop    -- rides the commit
+      them (the dispatch plan counts with an aggregate)      (dispatch: +2 jobs)
     → bound < GIANT_THRESHOLD_BYTES: one branch, the scan  -- giant-free:
       splits as they are                                      no shuffle
       otherwise two-branch dispatch: small rows keep scan  -- skew fix
@@ -184,28 +186,40 @@ def run_extract(
         attempts = {d: prior_attempts[d] + 1 for d in chunk}
         try:
             rows_in, payload_bound = pages.footer_sizes(chunk, "html")
+            # the two-branch dispatch plan reads the scan twice; every
+            # other plan reads it once, so an Observation there counts
+            # each source row once
+            single_scan = strategy != "dispatch" or _giant_free(payload_bound)
             src = pages.read(spark, partitions=chunk)
             rejected = dict.fromkeys(chunk, 0)
+            gate = None
             if url_filter:
                 # Stage-zero URL gate (web_url_filter's rules as one
                 # predicate): reject crawler-trap / blocklisted /
                 # generated-host pages BEFORE the Arrow extract stage
-                # parses a byte of their HTML. The per-date rejected
-                # counts are one extra job over the pruned url column
-                # only — the html bytes that dominate this table's IO are
-                # never read for it (column pruning), so at 100 TB the
-                # count costs ~a url-column scan, never a corpus scan.
+                # parses a byte of their HTML. The per-date rejects are
+                # counted on the source side, before the filter: on a
+                # single-scan plan by an Observation that rides the
+                # commit job, on a dispatch plan by an aggregate over
+                # the pruned url column (2 extra jobs, no html read).
                 from pdf_extractor_spark.queries.webtext import (
                     url_reject_expr,
                 )
 
-                counts = (
-                    src.select("partition_date", "url")
-                    .agg(*_count_per_date(chunk, url_reject_expr("url")))
-                    .first()
-                )
-                rejected = {d: counts[f"hits_{j}"] for j, d in enumerate(chunk)}
-                src = src.filter(~url_reject_expr("url"))
+                reject = url_reject_expr("url")
+                if single_scan:
+                    gate = Observation()
+                    src = src.observe(gate, *_count_per_date(chunk, reject))
+                else:
+                    counts = (
+                        src.select("partition_date", "url")
+                        .agg(*_count_per_date(chunk, reject))
+                        .first()
+                    )
+                    rejected = {
+                        d: counts[f"hits_{j}"] for j, d in enumerate(chunk)
+                    }
+                src = src.filter(~reject)
             if strategy == "dispatch":
                 extracted = _dispatch_plan(src, payload_bound, with_blocks)
             else:
@@ -223,6 +237,9 @@ def run_extract(
             extracted_tbl.overwrite_partitions(out, partitions=chunk)
             if fail_dates and set(chunk) & fail_dates:
                 raise RuntimeError(f"injected failure in chunk {chunk}")
+            if gate is not None:
+                counts = gate.get
+                rejected = {d: counts[f"hits_{j}"] for j, d in enumerate(chunk)}
             counts = observed.get
             rows_out = {d: counts[f"rows_{j}"] for j, d in enumerate(chunk)}
             n_errors = {d: counts[f"hits_{j}"] for j, d in enumerate(chunk)}
@@ -308,9 +325,14 @@ def _dispatch_plan(src: DataFrame, payload_bound: int | None, with_blocks: bool)
     stage — no shuffle, no idle giant tasks. An unknown bound (a footer
     unreadable or without ``html``) keeps the two-branch plan; both
     plans emit the same rows, so a wrong choice costs time, never output."""
-    if payload_bound is not None and payload_bound < GIANT_THRESHOLD_BYTES:
+    if _giant_free(payload_bound):
         return extract_stage(src, with_blocks=with_blocks)
     return extract_stage_dispatch(src, with_blocks=with_blocks)
+
+
+def _giant_free(payload_bound: int | None) -> bool:
+    """The footers prove no payload reaches GIANT_THRESHOLD_BYTES."""
+    return payload_bound is not None and payload_bound < GIANT_THRESHOLD_BYTES
 
 
 def pending_via_anti_join(spark, pages: IceTable, warehouse: str) -> list[str]:

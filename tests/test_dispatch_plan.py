@@ -260,3 +260,65 @@ def test_byte_bounded_ranges_match_row_loop_random(monkeypatch):
         )
         want = list(_row_loop_ranges(batch.column("payload"), 64))
         assert list(ex.byte_bounded_ranges(batch, "payload")) == want, rows
+
+
+def test_url_gate_rides_the_giant_free_commit(spark, tmp_path, monkeypatch):
+    """run_extract(url_filter=True) counts a giant-free chunk's URL-gate
+    rejects per date on the commit job itself (an Observation on the
+    source, before the filter): as many Spark jobs as the ungated run, and
+    the same ``url_rejected`` and lineage rows as the dispatch plan, which
+    counts them with a separate aggregate."""
+    import datetime as dt
+
+    from tests.conftest import spark_jobs
+
+    from pdf_extractor_spark.plans.extract_plan import run_extract
+    from pdf_extractor_spark.plans.lineage import LineageLog
+    from pdf_extractor_spark.tables.icetable import IceTable
+
+    bad = [
+        "https://best-casino.example/win",
+        "https://deep.example.org/" + "/".join(f"s{i}" for i in range(9)),
+    ]
+    rows = []
+    for day, n_bad in ((1, 2), (2, 1)):
+        ts = dt.datetime(2025, 6, day)
+        rows += [(f"http://ok{day}-{i}.example/", ts, b"<p>ok</p>")
+                 for i in range(4)]
+        rows += [(u, ts, b"<p>trap</p>") for u in bad[:n_bad]]
+    pages = IceTable(tmp_path / "pages")
+    pages.append(
+        spark.createDataFrame(rows, "url string, warc_ts timestamp, html binary")
+        .withColumn("partition_date", F.to_date("warc_ts"))
+    )
+
+    def run(wh, **kw):
+        return spark_jobs(
+            spark, lambda: run_extract(spark, pages, str(tmp_path / wh), **kw)
+        )
+
+    def lineage(wh):
+        return sorted(
+            (r["partition_date"], r["rows_in"], r["rows_out"], r["n_errors"],
+             r["status"])
+            for r in LineageLog(tmp_path / wh / "lineage").records()
+        )
+
+    (plain, plain_jobs) = run("plain")
+    (gated, gated_jobs) = run("gated", url_filter=True)
+    assert len(plain.processed) == len(gated.processed) == 2
+    assert gated_jobs == plain_jobs == 2
+    assert gated.url_rejected == 3
+    assert lineage("gated") == [
+        (dt.date(2025, 6, 1), 6, 4, 0, "ok"),
+        (dt.date(2025, 6, 2), 5, 4, 0, "ok"),
+    ]
+
+    # an unknown footer bound forces the two-branch plan and its aggregate
+    sizes = IceTable.footer_sizes
+    monkeypatch.setattr(
+        IceTable, "footer_sizes", lambda t, p, c: (sizes(t, p, c)[0], None)
+    )
+    (dispatched, _) = run("dispatched", url_filter=True)
+    assert dispatched.url_rejected == gated.url_rejected
+    assert lineage("dispatched") == lineage("gated")
