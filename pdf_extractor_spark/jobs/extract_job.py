@@ -5,7 +5,7 @@
         pdf_extractor_spark/jobs/extract_job.py \
         --pages <corpus.parquet | pages-icetable-root> \
         --warehouse /path/to/warehouse \
-        [--strategy dispatch|salt|none] [--partitions N]
+        [--strategy none|salt] [--partitions N]
 
 Local runs: ``python -m pdf_extractor_spark.jobs.extract_job …`` (builds its
 own local[*] session). Re-running against the same warehouse resumes per
@@ -65,9 +65,10 @@ def main(argv: list[str] | None = None) -> None:
                          "or local[*] when run directly)")
     ap.add_argument("--no-salt", action="store_true")
     ap.add_argument(
-        "--strategy", choices=["dispatch", "salt", "none"], default="dispatch",
-        help="skew plan: dispatch (two-branch, default), salt (byte-bucket "
-             "full repartition), none (trust input file layout)")
+        "--strategy", choices=["none", "salt"], default="none",
+        help="skew plan: none (default: one scan, each row extracted in "
+             "the scan split it was read in, no shuffle), salt "
+             "(byte-bucket full repartition first)")
     ap.add_argument(
         "--no-blocks", action="store_true",
         help="omit the per-block diagnostics column (~25%% faster)")

@@ -9,10 +9,11 @@ Design (SURVEY.md §4.3):
 - ``mapInArrow`` with the iterator form: per-task init happens once per
   Python worker, not once per row (reference re-initialized every engine per
   request, main.py:34 — SURVEY.md O2 reversal).
-- Skew: ``extract_stage_dispatch`` sends payloads of GIANT_THRESHOLD_BYTES
-  and up to a one-per-task branch; a caller that can prove no payload
-  reaches the threshold (``run_extract``, from parquet footers) runs the
-  plain ``extract_stage`` instead.
+- Skew: ``run_extract`` runs the plain ``extract_stage`` over the scan
+  splits, a giant row in its own split: tokenizer cost is linear in
+  payload bytes, and the byte re-chunking below bounds worker memory.
+  ``extract_stage_dispatch`` (giants repartitioned one per task) remains
+  for inputs where several giants share one small split.
 - Dispatch (O3) happens per element INSIDE the Arrow batch; no per-row
   Python outside the UDF, no driver-side loops.
 - Incoming batches are re-chunked by cumulative payload BYTES, not row

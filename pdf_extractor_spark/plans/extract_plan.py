@@ -1,26 +1,29 @@
 """The end-to-end extraction plan (SURVEY.md §4.3), resumable per partition.
 
-Physical shape per chunk of pending partition-dates::
+Physical shape per chunk of pending partition-dates — ONE scan, ONE job::
 
     footers of the chunk's pages files                     -- driver, no job
-      → rows_in per date, bound on any one html value
+      → rows_in per date
     IceTable scan (manifest-pruned to the chunk's dates)  -- no file listing,
                                                               schema bound
     → Project(url, warc_ts, html)                          -- column pruning
     → url_filter: observe(rejects per date), then drop    -- rides the commit
-      them (the dispatch plan counts with an aggregate)      (dispatch: +2 jobs)
-    → bound < GIANT_THRESHOLD_BYTES: one branch, the scan  -- giant-free:
-      splits as they are                                      no shuffle
-      otherwise two-branch dispatch: small rows keep scan  -- skew fix
-      splits, giants repartition one per task (or,
-      strategy="salt", a byte-bucket salted repartition)
-    → mapInArrow(extract)                                  -- Arrow batches
+      them
+    → mapInArrow(extract) over the scan splits as they    -- no shuffle; a
+      are (strategy="salt": a byte-bucket salted             giant row stays
+      repartition first)                                      in its split
     → observe(rows_out, n_errors per date)                 -- rides the commit
     → overwrite_partitions(extracted, dates)               -- idempotent commit
     → check rows_out + url_rejected == rows_in per date    -- else chunk fails
     → lineage.append(ok | failed row per date)             -- driver-side
 
-A giant-free chunk is therefore ONE Spark job: the commit's write.
+A chunk is therefore ONE Spark job: the commit's write. A giant payload
+needs no branch of its own: Spark cuts the JVM→Python Arrow batches at
+``spark.sql.execution.arrow.maxBytesPerBatch`` (64 MiB) and the stage
+re-cuts each batch at BATCH_TARGET_BYTES, so worker memory stays bounded,
+and tokenizer cost is linear in payload bytes, so a split's giant bytes
+cost about what the same bytes of ordinary pages cost. What one scan gives
+up is spreading several giants that share one small split over the cores.
 
 Why a driver loop over PARTITIONS (not one mega-job): each iteration is a
 full-cluster distributed job over one crawl-day (≈ hundreds of GB at design
@@ -44,13 +47,12 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
 from pdf_extractor_spark.operators.extract import (
-    GIANT_THRESHOLD_BYTES,
     extract_stage,
-    extract_stage_dispatch,
+    extract_stage_dispatch,  # noqa: F401 — perfbench wraps this name
     with_partition_date,
 )
 from pdf_extractor_spark.operators.skew import salted_repartition
@@ -117,19 +119,20 @@ def run_extract(
     num_partitions: int | None = None,
     fail_dates: set[str] | None = None,
     max_dates: int | None = None,
-    strategy: str = "dispatch",
+    strategy: str = "none",
     with_blocks: bool = True,
     dates_per_job: int = 1,
     url_filter: bool = False,
 ) -> ExtractRunResult:
     """Run (or resume) extraction of every pending partition of ``pages``.
 
-    ``strategy`` picks the skew plan: ``"dispatch"`` (default; two-branch —
-    small rows keep scan splits with zero shuffle, giants repartition
-    one-per-task) or ``"salt"`` (byte-bucket salted full repartition,
-    operators/skew.py; for inputs whose file layout is pathological enough
-    that even the small mass needs re-balancing). ``salt=False`` with
-    ``strategy="salt"`` disables re-balancing entirely.
+    ``strategy`` picks the skew plan: ``"none"`` (default) extracts each
+    chunk in one scan over the manifest-pruned files, every row — a giant
+    one too — in the scan split it was read in, with no shuffle;
+    ``"salt"`` first runs a byte-bucket salted full repartition
+    (operators/skew.py; for inputs whose file layout is pathological
+    enough that even the small mass needs re-balancing), which
+    ``salt=False`` turns off.
 
     ``fail_dates`` injects a failure after processing those dates' data but
     before their lineage commit — the kill-and-resume test hook (SURVEY.md
@@ -152,12 +155,15 @@ def run_extract(
     digit-host fraction, crawler-trap path depth) BEFORE the extract
     stage — the RefinedWeb/C4 reject-by-url-first shape; rejected
     pages never reach the Arrow parser. Deterministic, so resume
-    semantics are unchanged; the dropped count lands in
-    ``ExtractRunResult.url_rejected``.
+    semantics are unchanged; the per-date rejects are counted by an
+    Observation on the source that rides the commit job, and their sum
+    lands in ``ExtractRunResult.url_rejected``.
 
     A chunk whose observed ``rows_out`` plus URL-gate rejects differ
     from the footers' ``rows_in`` for any date fails (``status='failed'``
     with the mismatch in ``error_msg``), so its dates are pending again."""
+    if strategy not in ("none", "salt"):
+        raise ValueError(f"unknown strategy {strategy!r}: 'none' or 'salt'")
     extracted_tbl = IceTable(f"{warehouse}/extracted")
     lineage = LineageLog(f"{warehouse}/lineage")
 
@@ -185,46 +191,27 @@ def run_extract(
         t0 = time.monotonic()
         attempts = {d: prior_attempts[d] + 1 for d in chunk}
         try:
-            rows_in, payload_bound = pages.footer_sizes(chunk, "html")
-            # the two-branch dispatch plan reads the scan twice; every
-            # other plan reads it once, so an Observation there counts
-            # each source row once
-            single_scan = strategy != "dispatch" or _giant_free(payload_bound)
+            rows_in = pages.footer_sizes(chunk)
             src = pages.read(spark, partitions=chunk)
-            rejected = dict.fromkeys(chunk, 0)
             gate = None
             if url_filter:
                 # Stage-zero URL gate (web_url_filter's rules as one
                 # predicate): reject crawler-trap / blocklisted /
                 # generated-host pages BEFORE the Arrow extract stage
                 # parses a byte of their HTML. The per-date rejects are
-                # counted on the source side, before the filter: on a
-                # single-scan plan by an Observation that rides the
-                # commit job, on a dispatch plan by an aggregate over
-                # the pruned url column (2 extra jobs, no html read).
+                # counted on the source, before the filter, by an
+                # Observation that rides the commit job.
                 from pdf_extractor_spark.queries.webtext import (
                     url_reject_expr,
                 )
 
                 reject = url_reject_expr("url")
-                if single_scan:
-                    gate = Observation()
-                    src = src.observe(gate, *_count_per_date(chunk, reject))
-                else:
-                    counts = (
-                        src.select("partition_date", "url")
-                        .agg(*_count_per_date(chunk, reject))
-                        .first()
-                    )
-                    rejected = {
-                        d: counts[f"hits_{j}"] for j, d in enumerate(chunk)
-                    }
+                gate = Observation()
+                src = src.observe(gate, *_count_per_date(chunk, reject))
                 src = src.filter(~reject)
-            if strategy == "dispatch":
-                extracted = _dispatch_plan(src, payload_bound, with_blocks)
-            else:
+            if strategy == "salt":
                 src = salted_repartition(src, num_partitions, enabled=salt)
-                extracted = extract_stage(src, with_blocks=with_blocks)
+            extracted = extract_stage(src, with_blocks=with_blocks)
             # per-date rows and errors ride the commit job itself
             observed = Observation()
             error = F.col("error").isNotNull() & (F.col("error") != "")
@@ -237,9 +224,10 @@ def run_extract(
             extracted_tbl.overwrite_partitions(out, partitions=chunk)
             if fail_dates and set(chunk) & fail_dates:
                 raise RuntimeError(f"injected failure in chunk {chunk}")
-            if gate is not None:
-                counts = gate.get
-                rejected = {d: counts[f"hits_{j}"] for j, d in enumerate(chunk)}
+            counts = gate.get if gate is not None else {}
+            rejected = {
+                d: counts.get(f"hits_{j}", 0) for j, d in enumerate(chunk)
+            }
             counts = observed.get
             rows_out = {d: counts[f"rows_{j}"] for j, d in enumerate(chunk)}
             n_errors = {d: counts[f"hits_{j}"] for j, d in enumerate(chunk)}
@@ -316,23 +304,6 @@ def _count_per_date(dates: list[str], hit) -> list:
             F.count_if(on & hit).alias(f"hits_{j}"),
         ]
     return aggs
-
-
-def _dispatch_plan(src: DataFrame, payload_bound: int | None, with_blocks: bool):
-    """The dispatch strategy's plan for one chunk. When the footer bound
-    proves no payload reaches GIANT_THRESHOLD_BYTES the giant branch could
-    never receive a row, so the chunk runs as the plain single-branch
-    stage — no shuffle, no idle giant tasks. An unknown bound (a footer
-    unreadable or without ``html``) keeps the two-branch plan; both
-    plans emit the same rows, so a wrong choice costs time, never output."""
-    if _giant_free(payload_bound):
-        return extract_stage(src, with_blocks=with_blocks)
-    return extract_stage_dispatch(src, with_blocks=with_blocks)
-
-
-def _giant_free(payload_bound: int | None) -> bool:
-    """The footers prove no payload reaches GIANT_THRESHOLD_BYTES."""
-    return payload_bound is not None and payload_bound < GIANT_THRESHOLD_BYTES
 
 
 def pending_via_anti_join(spark, pages: IceTable, warehouse: str) -> list[str]:

@@ -6,7 +6,7 @@ topology; this module is the SAME extraction stage mounted on a
 (e.g. a crawler drops parquet files into a landing directory):
 
     readStream.parquet(landing_dir)
-      → extract_stage_dispatch            (identical stage, identical plan)
+      → extract_stage                     (identical stage, identical plan)
       → foreachBatch: IceTable.append + lineage row per micro-batch
       trigger: availableNow (catch-up-and-stop) or processingTime
 
@@ -47,7 +47,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pdf_extractor_spark.operators.extract import (
-    extract_stage_dispatch,
+    extract_stage,
     with_partition_date,
 )
 from pdf_extractor_spark.plans.lineage import LineageLog
@@ -164,7 +164,7 @@ def commit_batch(
         return False
     t0 = time.monotonic()
     out = (
-        with_partition_date(extract_stage_dispatch(batch_df))
+        with_partition_date(extract_stage(batch_df))
         .withColumn("batch_id", F.lit(batch_id).cast("long"))
         .withColumn("stream_id", F.lit(stream_id))
     )

@@ -52,6 +52,9 @@ from pyspark.sql import DataFrame, SparkSession
 # concurrency is real and cheap to close.
 _COMMIT_LOCKS: dict[str, threading.RLock] = {}
 _COMMIT_LOCKS_GUARD = threading.Lock()
+# serializes _read_parquet's raise-and-restore of the session's listing
+# threshold, so a concurrent read never restores another's raised value
+_LISTING_LOCK = threading.Lock()
 
 
 def _commit_lock(root: pathlib.Path) -> threading.RLock:
@@ -142,34 +145,25 @@ def _file_column_stats(path: str, cols: tuple[str, ...]) -> dict:
     return out
 
 
-# Per-file (num_rows, {column: largest uncompressed column-chunk bytes
-# over its row groups}), from the footer only; cached per immutable file
+# Per-file row count, from the footer only; cached per immutable file
 # like the stats above.
-_FILE_FOOTER_CACHE: dict[str, tuple[int, dict[str, int]]] = {}
+_FILE_ROWS_CACHE: dict[str, int] = {}
 
 
-def _file_footer(path: str) -> tuple[int, dict[str, int]] | None:
-    """Row count and column-chunk sizes of one data file, or None when
-    its footer cannot be read (not cached: the cause may be transient)."""
-    cached = _FILE_FOOTER_CACHE.get(path)
+def _file_rows(path: str) -> int | None:
+    """Row count of one data file from its footer, or None when the
+    footer cannot be read (not cached: the cause may be transient)."""
+    cached = _FILE_ROWS_CACHE.get(path)
     if cached is not None:
         return cached
     import pyarrow.parquet as pq
 
     try:
-        md = pq.ParquetFile(path).metadata
+        n = pq.ParquetFile(path).metadata.num_rows
     except (OSError, ValueError):  # missing file, or not parquet
         return None
-    sizes: dict[str, int] = {}
-    for rg in range(md.num_row_groups):
-        group = md.row_group(rg)
-        for i in range(group.num_columns):
-            chunk = group.column(i)
-            name = chunk.path_in_schema
-            sizes[name] = max(sizes.get(name, 0), chunk.total_uncompressed_size)
-    out = (md.num_rows, sizes)
-    _FILE_FOOTER_CACHE[path] = out
-    return out
+    _FILE_ROWS_CACHE[path] = n
+    return n
 
 
 def _normalize_pred_value(tag: str, value):
@@ -343,38 +337,18 @@ class IceTable:
     def partition_files(self, part_ref) -> list[str]:
         return self._manifest_files(part_ref)
 
-    def footer_sizes(
-        self, partitions: list[str], col: str
-    ) -> tuple[dict[str, int | None], int | None]:
-        """From the current snapshot's data-file footers alone (no Spark
-        job): each partition's row count, and an upper bound on the byte
-        length of any single ``col`` value — the largest uncompressed
-        ``col`` column chunk of any row group. No value can be longer:
-        plain and dictionary encoding store it whole in one data or
-        dictionary page of its chunk, and delta byte-array rebuilds it
-        from suffixes that are all stored in the chunk. A partition whose
-        footers cannot all be read counts None; the bound is None when
-        any footer is unreadable or a non-empty file lacks ``col``."""
+    def footer_sizes(self, partitions: list[str]) -> dict[str, int | None]:
+        """Each partition's size in rows, from the current snapshot's
+        data-file footers alone (no Spark job). A partition whose footers
+        cannot all be read counts None."""
         snap = self.current_snapshot()
         parts = snap["partitions"] if snap else {}
         rows: dict[str, int | None] = {}
-        bound: int | None = 0
         for part in partitions:
             files = self._manifest_files(parts[part]) if part in parts else []
-            n: int | None = 0
-            for rel in files:
-                footer = _file_footer(str(self.root / rel))
-                if footer is None:
-                    n = bound = None
-                    continue
-                if n is not None:
-                    n += footer[0]
-                if footer[0] == 0 or bound is None:
-                    continue
-                size = footer[1].get(col)
-                bound = None if size is None else max(bound, size)
-            rows[part] = n
-        return rows, bound
+            counts = [_file_rows(str(self.root / rel)) for rel in files]
+            rows[part] = None if None in counts else sum(counts)
+        return rows
 
     def files(
         self,
@@ -1034,7 +1008,12 @@ class IceTable:
         ``schema_json`` (the snapshot's tracked schema) closes that hole
         — any tracked column absent from the scan is appended as a typed
         NULL, so the read's column set never depends on which files
-        survived pruning."""
+        survived pruning.
+
+        The manifest already lists every file, yet above
+        ``parallelPartitionDiscovery.threshold`` paths Spark would list
+        them again with a Spark job; the threshold is raised to the file
+        count for this one call and then restored."""
         from pyspark.sql import types as T
 
         r = spark.read.option("basePath", str(self.data_dir))
@@ -1051,7 +1030,20 @@ class IceTable:
                     [f for f in tracked.fields if f.name != self.partition_col]
                 )
             )
-        df = r.parquet(*files)
+        key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+        with _LISTING_LOCK:
+            if len(files) <= int(spark.conf.get(key)):
+                df = r.parquet(*files)
+            else:
+                prev = spark.conf.get(key, None)
+                spark.conf.set(key, str(len(files)))
+                try:
+                    df = r.parquet(*files)
+                finally:
+                    if prev is None:
+                        spark.conf.unset(key)
+                    else:
+                        spark.conf.set(key, prev)
         if evolved and tracked is not None:
             from pyspark.sql import functions as F
 

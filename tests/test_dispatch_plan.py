@@ -1,9 +1,9 @@
-"""The two-branch skew plan (extract_stage_dispatch) must be a pure
-physical-plan choice: identical output row set to the single-stage plan,
-for any giant_threshold (here forced low so the micro corpus actually
-exercises both branches). run_extract drops the giant branch when the
-pages footers prove no payload reaches the threshold; both plans must
-emit the same rows."""
+"""run_extract extracts every chunk in one scan: the plain extract_stage
+over the manifest-pruned files, a giant row in its own scan split, one
+Spark job per chunk. The two-branch operator (extract_stage_dispatch)
+must stay a pure physical-plan choice: identical output row set to the
+single-stage plan, for any giant_threshold (here forced low so the micro
+corpus actually exercises both branches)."""
 
 from __future__ import annotations
 
@@ -82,98 +82,241 @@ def _pages_table(spark, tmp_path, name="pages"):
     )
 
 
-def _chunk_plan(spark, pages):
-    """run_extract's dispatch plan for one chunk of every date, and the
-    footer bound it was chosen by."""
-    from pdf_extractor_spark.plans.extract_plan import _dispatch_plan
-
-    dates = pages.partitions()
-    _, bound = pages.footer_sizes(dates, "html")
-    src = pages.read(spark, partitions=dates)
-    return _dispatch_plan(src, bound, True), bound
+PAGES_DDL = "url string, warc_ts timestamp, html binary"
 
 
-def test_giant_free_chunk_plans_no_exchange(spark, tmp_path):
-    from tests.test_plans import plan_of
-
-    from pdf_extractor_spark.operators.extract import GIANT_THRESHOLD_BYTES
-
-    df, bound = _chunk_plan(spark, _pages_table(spark, tmp_path))
-    assert bound is not None and bound < GIANT_THRESHOLD_BYTES
-    assert "Exchange" not in plan_of(df)
-
-
-def test_giant_chunk_keeps_repartitioned_branch(spark, tmp_path):
-    """One payload above the threshold puts the footer bound above it,
-    so the chunk keeps the two-branch plan with its giant shuffle."""
-    import datetime as dt
-
-    from tests.test_plans import plan_of
-
-    from pdf_extractor_spark.operators.extract import GIANT_THRESHOLD_BYTES
-    from pdf_extractor_spark.tables.icetable import IceTable
-
-    pages = IceTable(tmp_path / "pages")
-    giant = b"<p>" + b"a" * GIANT_THRESHOLD_BYTES + b"</p>"
+def _append(spark, pages, rows, schema=PAGES_DDL):
+    """Append ``rows`` to the pages IceTable, partitioned by day."""
     pages.append(
-        spark.createDataFrame(
-            [
-                ("http://giant.example/", dt.datetime(2025, 6, 1), giant),
-                ("http://tiny.example/", dt.datetime(2025, 6, 1), b"<p>hi</p>"),
-            ],
-            "url string, warc_ts timestamp, html binary",
-        ).withColumn("partition_date", F.to_date("warc_ts"))
+        spark.createDataFrame(rows, schema).withColumn(
+            "partition_date", F.to_date("warc_ts")
+        )
     )
-    df, bound = _chunk_plan(spark, pages)
-    assert bound >= GIANT_THRESHOLD_BYTES
-    assert "RoundRobinPartitioning" in plan_of(df)
+    return pages
 
 
-def test_footer_without_html_falls_back_to_dispatch(spark, tmp_path):
-    """Files written before ``html`` existed give no bound on it, so the
-    chunk keeps the two-branch plan."""
-    import datetime as dt
+def _giant() -> bytes:
+    from pdf_extractor_spark.operators.extract import GIANT_THRESHOLD_BYTES
 
+    return b"<p>" + b"a" * GIANT_THRESHOLD_BYTES + b"</p>"
+
+
+def _record_commits(monkeypatch) -> list[str]:
+    """The executed plan of every DataFrame run_extract commits, in
+    order, from a wrapped ``IceTable.overwrite_partitions``."""
     from tests.test_plans import plan_of
 
     from pdf_extractor_spark.tables.icetable import IceTable
 
-    pages = IceTable(tmp_path / "pages")
+    plans = []
+    commit = IceTable.overwrite_partitions
+
+    def recording(self, df, *args, **kwargs):
+        plans.append(plan_of(df))
+        return commit(self, df, *args, **kwargs)
+
+    monkeypatch.setattr(IceTable, "overwrite_partitions", recording)
+    return plans
+
+
+def _extracted(spark, wh, cols=None) -> dict:
+    """url → row of the extracted table, every column of the extracted
+    schema unless ``cols`` names fewer."""
+    from pdf_extractor_spark.operators.extract import EXTRACTED_SCHEMA
+    from pdf_extractor_spark.tables.icetable import IceTable
+
+    df = IceTable(f"{wh}/extracted").read(spark)
+    return {
+        r.url: r
+        for r in df.select(*(cols or EXTRACTED_SCHEMA.names)).collect()
+    }
+
+
+def _lineage(wh) -> list[tuple]:
+    from pdf_extractor_spark.plans.lineage import LineageLog
+
+    return sorted(
+        (r["partition_date"], r["rows_in"], r["rows_out"], r["n_errors"],
+         r["status"])
+        for r in LineageLog(f"{wh}/lineage").records()
+    )
+
+
+def _matches_ref_extractor(row, payload) -> bool:
+    from pdf_extractor_spark.ref_extractor import extract
+
+    ref = extract(payload)
+    return (row.doc_type, row.extracted_text, row.n_blocks, row.n_chars,
+            row.error) == (ref.doc_type, ref.text, ref.n_blocks, ref.n_chars,
+                           ref.error)
+
+
+def test_giant_free_chunk_plans_no_exchange(spark, tmp_path, monkeypatch):
+    """The plan run_extract commits reads the scan splits as they are."""
+    from pdf_extractor_spark.plans.extract_plan import run_extract
+
+    plans = _record_commits(monkeypatch)
+    run_extract(spark, _pages_table(spark, tmp_path), str(tmp_path / "wh"),
+                max_dates=1)
+    (plan,) = plans
+    assert "Exchange" not in plan
+
+
+def test_giant_chunk_is_one_scan(spark, tmp_path, monkeypatch):
+    """A chunk holding a payload of GIANT_THRESHOLD_BYTES or more runs
+    like any other: one scan, no Exchange, one Spark job (the two-branch
+    plan scanned the chunk twice and shuffled its giants: 2 jobs)."""
+    import datetime as dt
+
+    from tests.conftest import spark_jobs
+
+    from pdf_extractor_spark.plans.extract_plan import run_extract
+    from pdf_extractor_spark.tables.icetable import IceTable
+
     ts = dt.datetime(2025, 6, 1)
-    pages.append(
-        spark.createDataFrame(
-            [("http://old.example/", ts)], "url string, warc_ts timestamp"
-        ).withColumn("partition_date", F.to_date("warc_ts"))
+    payloads = {"http://giant.example/": _giant(),
+                "http://tiny.example/": b"<p>hi</p>"}
+    pages = _append(spark, IceTable(tmp_path / "pages"),
+                    [(u, ts, p) for u, p in payloads.items()])
+    plans = _record_commits(monkeypatch)
+    wh = tmp_path / "wh"
+    res, jobs = spark_jobs(spark, lambda: run_extract(spark, pages, str(wh)))
+    assert res.processed == ["2025-06-01"] and not res.failed
+    assert jobs == 1
+    (plan,) = plans
+    assert "Exchange" not in plan
+    assert plan.count("FileScan") == 1
+    rows = _extracted(spark, wh)
+    assert rows.keys() == payloads.keys()
+    assert all(_matches_ref_extractor(rows[u], p) for u, p in payloads.items())
+
+
+def test_footer_without_html_extracts_every_row(spark, tmp_path, monkeypatch):
+    """Files written before ``html`` existed still extract their rows,
+    NULL html as ``empty``; a footer that cannot be read leaves rows_in
+    unknown (None) but the rows still extract and the date commits ok."""
+    import datetime as dt
+
+    from pdf_extractor_spark.plans.extract_plan import run_extract
+    from pdf_extractor_spark.tables import icetable
+
+    ts = dt.datetime(2025, 6, 1)
+    pages = _append(
+        spark, icetable.IceTable(tmp_path / "pages"),
+        [("http://old.example/", ts)], "url string, warc_ts timestamp",
     )
-    pages.append(
-        spark.createDataFrame(
-            [("http://new.example/", ts, b"<p>hi</p>")],
-            "url string, warc_ts timestamp, html binary",
-        ).withColumn("partition_date", F.to_date("warc_ts"))
-    )
-    df, bound = _chunk_plan(spark, pages)
-    assert bound is None
-    assert "RoundRobinPartitioning" in plan_of(df)
-    rows = {r.url: r.doc_type for r in df.collect()}
-    assert rows == {"http://old.example/": "empty", "http://new.example/": "html"}
+    _append(spark, pages, [("http://new.example/", ts, b"<p>hi</p>")])
+    want = {"http://old.example/": "empty", "http://new.example/": "html"}
+    for wh, rows_in in (("read", 2), ("unreadable", None)):
+        if rows_in is None:
+            monkeypatch.setattr(icetable, "_file_rows", lambda path: None)
+        res = run_extract(spark, pages, str(tmp_path / wh))
+        assert res.processed == ["2025-06-01"] and not res.failed
+        got = _extracted(spark, tmp_path / wh)
+        assert {u: r.doc_type for u, r in got.items()} == want
+        assert _lineage(tmp_path / wh) == [
+            (dt.date(2025, 6, 1), rows_in, 2, 0, "ok")
+        ]
 
 
 def test_plain_and_dispatch_plans_byte_identical(spark, tmp_path):
-    from pdf_extractor_spark.plans.extract_plan import _dispatch_plan
+    """run_extract's one-scan output, giant included, equals the
+    two-branch operator's row for row, every column."""
+    import datetime as dt
+
+    from pdf_extractor_spark.operators.extract import EXTRACTED_SCHEMA
+    from pdf_extractor_spark.plans.extract_plan import run_extract
 
     pages = _pages_table(spark, tmp_path)
-    src = pages.read(spark)
-    _, bound = pages.footer_sizes(pages.partitions(), "html")
+    day = dt.datetime.fromisoformat(pages.partitions()[0])
+    _append(
+        spark, pages, [("http://giant.example/", day, _giant(), None, "en")],
+        "url string, warc_ts timestamp_ntz, html binary, text string, "
+        "lang string",
+    )
+    wh = tmp_path / "wh"
+    res = run_extract(spark, pages, str(wh))
+    assert res.processed == pages.partitions() and not res.failed
+    plain = _extracted(spark, wh)
+    dispatched = {
+        r.url: r
+        for r in extract_stage_dispatch(pages.read(spark), giant_threshold=4096)
+        .select(*EXTRACTED_SCHEMA.names)
+        .collect()
+    }
+    assert len(plain) == pages.read(spark).count()
+    assert plain == dispatched
 
-    def rows(df):
-        return sorted(
-            (r.url, r.extracted_text, r.doc_type, r.error)
-            for r in df.collect()
-        )
 
-    plain = rows(_dispatch_plan(src, bound, True))
-    assert len(plain) == src.count()
-    assert plain == rows(_dispatch_plan(src, None, True))
+def test_giant_file_reaches_python_in_byte_bounded_batches(spark, tmp_path):
+    """The memory bound the one-scan plan relies on: Spark cuts the
+    JVM→Python Arrow batches of a scan at
+    ``spark.sql.execution.arrow.maxBytesPerBatch`` (64 MiB), so one file
+    of 8 giant rows (80 MiB of html) reaches a mapInArrow in batches of
+    at most 64 MiB plus one row, never whole; and run_extract over that
+    file matches the reference extractor row for row."""
+    import datetime as dt
+    import random
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pdf_extractor_spark.corpus.build import rows_to_pages_table
+    from pdf_extractor_spark.corpus.generator import PageRow, _giant_html
+    from pdf_extractor_spark.plans.extract_plan import run_extract
+    from pdf_extractor_spark.sources.pages import ingest_corpus_to_icetable
+
+    mib = 1024 * 1024
+    rng = random.Random(8)
+    ts = dt.datetime(2025, 6, 1)
+    payloads = {
+        f"http://giant{i}.example/": _giant_html(rng, 10 * mib)
+        for i in range(8)
+    }
+    staging = tmp_path / "giants.parquet"
+    pq.write_table(
+        rows_to_pages_table(
+            [PageRow(u, ts, p, None, "en", "E4h") for u, p in payloads.items()]
+        ),
+        staging,
+    )
+    pages = ingest_corpus_to_icetable(spark, staging, tmp_path / "pages")
+    assert len(pages.files()) == 1
+    sizes = [len(p) for p in payloads.values()]
+    assert sum(sizes) > 64 * mib + max(sizes)  # one batch would break it
+
+    schema = pa.schema([("rows", pa.int64()), ("bytes", pa.int64()),
+                        ("largest", pa.int64())])
+
+    # nested, so it pickles by value
+    def probe(batches):
+        import pyarrow.compute as pc
+
+        for batch in batches:
+            sizes = pc.binary_length(batch.column("html"))
+            yield pa.RecordBatch.from_pylist(
+                [{"rows": batch.num_rows, "bytes": pc.sum(sizes).as_py(),
+                  "largest": pc.max(sizes).as_py()}],
+                schema=schema,
+            )
+
+    batches = (
+        pages.read(spark).select("html")
+        .mapInArrow(probe, "rows long, bytes long, largest long")
+        .collect()
+    )
+    assert sum(b.rows for b in batches) == 8
+    assert all(b.bytes <= 64 * mib + b.largest for b in batches), batches
+
+    wh = tmp_path / "wh"
+    res = run_extract(spark, pages, str(wh))
+    assert res.processed == ["2025-06-01"] and not res.failed
+    rows = _extracted(
+        spark, wh,
+        ["url", "doc_type", "extracted_text", "n_blocks", "n_chars", "error"],
+    )
+    assert rows.keys() == payloads.keys()
+    assert all(_matches_ref_extractor(rows[u], p) for u, p in payloads.items())
 
 
 def test_giant_free_chunk_is_one_spark_job(spark, tmp_path):
@@ -262,46 +405,33 @@ def test_byte_bounded_ranges_match_row_loop_random(monkeypatch):
         assert list(ex.byte_bounded_ranges(batch, "payload")) == want, rows
 
 
-def test_url_gate_rides_the_giant_free_commit(spark, tmp_path, monkeypatch):
-    """run_extract(url_filter=True) counts a giant-free chunk's URL-gate
-    rejects per date on the commit job itself (an Observation on the
-    source, before the filter): as many Spark jobs as the ungated run, and
-    the same ``url_rejected`` and lineage rows as the dispatch plan, which
-    counts them with a separate aggregate."""
+def test_url_gate_rides_the_commit(spark, tmp_path):
+    """run_extract(url_filter=True) counts each chunk's URL-gate rejects
+    per date on the commit job itself (an Observation on the source,
+    before the filter), a chunk holding a giant payload too: as many
+    Spark jobs as the ungated run."""
     import datetime as dt
 
     from tests.conftest import spark_jobs
 
     from pdf_extractor_spark.plans.extract_plan import run_extract
-    from pdf_extractor_spark.plans.lineage import LineageLog
     from pdf_extractor_spark.tables.icetable import IceTable
 
     bad = [
         "https://best-casino.example/win",
         "https://deep.example.org/" + "/".join(f"s{i}" for i in range(9)),
     ]
-    rows = []
+    rows = [("http://giant.example/", dt.datetime(2025, 6, 1), _giant())]
     for day, n_bad in ((1, 2), (2, 1)):
         ts = dt.datetime(2025, 6, day)
         rows += [(f"http://ok{day}-{i}.example/", ts, b"<p>ok</p>")
                  for i in range(4)]
         rows += [(u, ts, b"<p>trap</p>") for u in bad[:n_bad]]
-    pages = IceTable(tmp_path / "pages")
-    pages.append(
-        spark.createDataFrame(rows, "url string, warc_ts timestamp, html binary")
-        .withColumn("partition_date", F.to_date("warc_ts"))
-    )
+    pages = _append(spark, IceTable(tmp_path / "pages"), rows)
 
     def run(wh, **kw):
         return spark_jobs(
             spark, lambda: run_extract(spark, pages, str(tmp_path / wh), **kw)
-        )
-
-    def lineage(wh):
-        return sorted(
-            (r["partition_date"], r["rows_in"], r["rows_out"], r["n_errors"],
-             r["status"])
-            for r in LineageLog(tmp_path / wh / "lineage").records()
         )
 
     (plain, plain_jobs) = run("plain")
@@ -309,16 +439,7 @@ def test_url_gate_rides_the_giant_free_commit(spark, tmp_path, monkeypatch):
     assert len(plain.processed) == len(gated.processed) == 2
     assert gated_jobs == plain_jobs == 2
     assert gated.url_rejected == 3
-    assert lineage("gated") == [
-        (dt.date(2025, 6, 1), 6, 4, 0, "ok"),
+    assert _lineage(tmp_path / "gated") == [
+        (dt.date(2025, 6, 1), 7, 5, 0, "ok"),
         (dt.date(2025, 6, 2), 5, 4, 0, "ok"),
     ]
-
-    # an unknown footer bound forces the two-branch plan and its aggregate
-    sizes = IceTable.footer_sizes
-    monkeypatch.setattr(
-        IceTable, "footer_sizes", lambda t, p, c: (sizes(t, p, c)[0], None)
-    )
-    (dispatched, _) = run("dispatched", url_filter=True)
-    assert dispatched.url_rejected == gated.url_rejected
-    assert lineage("dispatched") == lineage("gated")

@@ -290,6 +290,31 @@ def test_tagged_snapshot_survives_expiry(spark, tbl):
     assert not (tbl.meta_dir / "snap-00000000.json").exists()
 
 
+def test_read_of_many_files_lists_none(spark, tbl):
+    """A read of more files than ``parallelPartitionDiscovery.threshold``
+    launches no file-listing job (the manifest lists the files), and
+    leaves the session's threshold as it found it, set or unset."""
+    from tests.conftest import spark_jobs
+
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    tbl.append(
+        spark.range(0, 40, 1, numPartitions=40).selectExpr(
+            "cast(id as int) id", "'v' v", "'2025-06-14' partition_date"
+        )
+    )
+    assert len(tbl.files()) == 40
+    for before in (None, "8"):
+        if before is not None:
+            spark.conf.set(key, before)
+        try:
+            df, jobs = spark_jobs(spark, lambda: tbl.read(spark))
+            assert jobs == 0
+            assert spark.conf.get(key, None) == before
+        finally:
+            spark.conf.unset(key)
+    assert df.count() == 40
+
+
 def test_unevolved_read_is_schema_bound(spark, tbl):
     """An unevolved table's read binds the snapshot's tracked schema, so
     it launches no schema-inference job, and reads back exactly what
@@ -315,24 +340,21 @@ def test_unevolved_read_is_schema_bound(spark, tbl):
     assert sorted(r.id for r in pruned.collect()) == [2, 3]
 
 
-def test_footer_sizes_rows_and_payload_bound(spark, tbl):
-    """Row counts per partition and the payload bound come from footers
-    alone: the bound covers the longest value, and a column absent from
-    the files gives no bound."""
-    tbl.append(
-        spark.createDataFrame(
-            [(1, "x" * 5000, "2025-06-14"), (2, "y", "2025-06-14"),
-             (3, "z", "2025-06-15")],
-            "id int, v string, partition_date string",
-        )
+def test_footer_sizes_rows_per_partition(spark, tbl):
+    """Row counts per partition come from footers alone, summed over
+    every file of the partition."""
+    from tests.conftest import spark_jobs
+
+    tbl.append(_df(spark, [(1, "x", "2025-06-14"), (2, "y", "2025-06-14"),
+                           (3, "z", "2025-06-15")]))
+    tbl.append(_df(spark, [(4, "w", "2025-06-15")]))
+    rows, jobs = spark_jobs(
+        spark, lambda: tbl.footer_sizes(["2025-06-14", "2025-06-15"])
     )
-    rows, bound = tbl.footer_sizes(["2025-06-14", "2025-06-15"], "v")
-    assert rows == {"2025-06-14": 2, "2025-06-15": 1}
-    assert bound >= 5000
-    assert tbl.footer_sizes(["2025-06-15"], "v")[1] < 5000
-    assert tbl.footer_sizes(["2025-06-14"], "html")[1] is None
-    # a partition with no files holds no rows and bounds nothing
-    assert tbl.footer_sizes(["1999-01-01"], "v") == ({"1999-01-01": 0}, 0)
+    assert jobs == 0
+    assert rows == {"2025-06-14": 2, "2025-06-15": 2}
+    # a partition with no files holds no rows
+    assert tbl.footer_sizes(["1999-01-01"]) == {"1999-01-01": 0}
 
 
 def test_footer_sizes_unreadable_footer_is_unknown(spark, tmp_path):
@@ -341,7 +363,7 @@ def test_footer_sizes_unreadable_footer_is_unknown(spark, tmp_path):
     (bad,) = other.files(["2025-06-15"])
     with open(bad, "wb") as f:
         f.write(b"not parquet")
-    assert other.footer_sizes(["2025-06-14", "2025-06-15"], "v") == (
-        {"2025-06-14": 1, "2025-06-15": None},
-        None,
-    )
+    assert other.footer_sizes(["2025-06-14", "2025-06-15"]) == {
+        "2025-06-14": 1,
+        "2025-06-15": None,
+    }

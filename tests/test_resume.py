@@ -611,7 +611,7 @@ def test_zero_row_pending_date(spark, pages_tbl, tmp_path):
         .withColumn("partition_date", F.to_date("warc_ts"))
     )
     pages_tbl.upsert(spark, moved, keys=["url"])
-    assert pages_tbl.footer_sizes([dates[0]], "html")[0] == {dates[0]: 0}
+    assert pages_tbl.footer_sizes([dates[0]]) == {dates[0]: 0}
     new_date = pages_tbl.partitions()[-1]
 
     out = {}
